@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run Verify's parquet output
-against the DuckDB oracle on the same sfDir and diff per query.
+against the DuckDB oracle on the same sfDir and diff per query. Exits non-zero
+on any failed or missing result.
 
 Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
 """
@@ -52,9 +53,13 @@ def main(sfdir: str, outdir: str) -> int:
         else:
             print(f"FAIL {name}: {msg}")
             n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, "
-          f"{len([n for n in oracles if not os.path.isdir(os.path.join(outdir, n))])} missing")
-    return 1 if n_fail else 0
+    # an oracle with no result is a fixture that threw (Verify only logs it)
+    missing = sorted(n for n in oracles
+                     if not os.path.isdir(os.path.join(outdir, n)))
+    for name in missing:
+        print(f"MISSING {name}: no result directory")
+    print(f"\n{n_pass} pass, {n_fail} fail, {len(missing)} missing")
+    return 1 if n_fail or missing else 0
 
 
 def compare(got, exp):

@@ -17,7 +17,8 @@ import graft.functions.{CosineSimilarity, HeavyHittersAgg, KmvAgg, SortedInterse
   *   graft_qsketch(hash, v, k)     — bottom-k quantile sketch aggregate
   *   graft_qsketch_merge(qsk, k)   — merge stored quantile sketches
   *
-  * Register either at session build
+  * plus the [[MvRewrite]] optimizer rule (session build only). Register
+  * either at session build
   * (`.withExtensions(new GraftExtensions)`) or on a live session
   * (`GraftExtensions.register(spark)`).
   */
@@ -26,7 +27,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.definitions.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    e.injectOptimizerRule(_ => PaneRewrite())
     e.injectOptimizerRule(_ => MvRewrite())
   }
 }

@@ -8,6 +8,7 @@ import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
 import graft.similarity.Ann
+import graft.streaming.{FileReplay, Replay}
 import OracleSql._
 
 /** Sequence packing, k-means, TF-IDF/LM scoring, the crawl tier (WARC,
@@ -566,39 +567,25 @@ object CrawlQueries {
     */
   val qStreamFrontier = Fixture(
     "q_stream_frontier",
-    (s, d) => {
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val rows = Tables.documents(s, d)
         .select(col("doc_id").cast("long")).as[Long].collect().sorted
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val stream = ms.toDF().toDF("doc_id")
-        .withColumn("domain", concat(lit("site"),
-          (col("doc_id") % 40).cast("string"),
-          when(col("doc_id") % 4 === 0, lit(".co.uk")).otherwise(lit(".com"))))
-        // whole-second event times ((id+1) s past epoch): the emitted
-        // Timestamp is ms-precision, so sub-ms offsets would truncate
-        // BEHIND the already-advanced watermark and trip
-        // EMITTING_ROWS_OLDER_THAN_WATERMARK on the chained stage
-        .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
-        .withWatermark("ts", "0 seconds")
-      val sched = graft.streaming.StreamingFrontier
-        .schedule(stream, "doc_id", "domain", "ts")
-        .select(col("id").as("doc_id"), col("domain"), col("fetch_round"))
-      val sink = s"stream_frontier_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = sched.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, Replay.chunked(rows, 4)) { in =>
+        val stream = in.toDF("doc_id")
+          .withColumn("domain", concat(lit("site"),
+            (col("doc_id") % 40).cast("string"),
+            when(col("doc_id") % 4 === 0, lit(".co.uk")).otherwise(lit(".com"))))
+          // whole-second event times ((id+1) s past epoch): the emitted
+          // Timestamp is ms-precision, so sub-ms offsets would truncate
+          // BEHIND the already-advanced watermark and trip
+          // EMITTING_ROWS_OLDER_THAN_WATERMARK on the chained stage
+          .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
+          .withWatermark("ts", "0 seconds")
+        graft.streaming.StreamingFrontier
+          .schedule(stream, "doc_id", "domain", "ts")
+          .select(col("id").as("doc_id"), col("domain"), col("fetch_round"))
+      }
     },
     qFrontierSchedule.oracle)
 
@@ -934,35 +921,19 @@ object CrawlQueries {
     */
   val qStreamHeavyHitters = Fixture(
     "q_stream_heavy_hitters",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
       val rows = Tables.eventsWithEpoch(s, d)
         .select(col("event_type"),
           floor(sqrt(col("user_id") % 150)).cast("long").cast("string").as("bk"),
           col("es"), col("event_id"))
         .as[(String, String, Long, Long)].collect().sortBy(r => (r._3, r._4))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, Long, Long)]
-      val stream = ms.toDF().toDF("event_type", "bk", "es", "event_id")
-      val out = graft.streaming.StreamingHeavyHitters
-        .heavyHitters(stream, "event_type", "bk", 16)
-      val sink = s"stream_hh_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val out = Replay.chunks(s, Replay.chunked(rows, 4)) { in =>
+        graft.streaming.StreamingHeavyHitters.heavyHitters(
+          in.toDF("event_type", "bk", "es", "event_id"), "event_type", "bk", 16)
+      }
       val w = org.apache.spark.sql.expressions.Window.partitionBy("grp")
-      s.table(sink)
-        .withColumn("__mx", max("seq").over(w))
+      out.withColumn("__mx", max("seq").over(w))
         .where(col("seq") === col("__mx"))
         .select(col("grp").as("event_type"), col("term").as("bk"), col("est"))
     },
@@ -983,37 +954,22 @@ object CrawlQueries {
     */
   val qStreamDrift = Fixture(
     "q_stream_drift",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
       val emb = Tables.embeddings(s, d)
       val cents = emb.where(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val rows = emb.select(col("vec_id").cast("long"), col("embedding"))
         .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      val out = Ann.assignCentroids(ms.toDF().toDF("vec_id", "embedding"), cents)
-        .withColumn("ts", timestamp_seconds(col("vec_id")))
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "60 seconds"), col("centroid_id"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("window.start")).as("ws"),
-          col("centroid_id"), col("n"))
-      val sink = s"stream_drift_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, Replay.chunked(rows, 2)) { in =>
+        Ann.assignCentroids(in.toDF("vec_id", "embedding"), cents)
+          .withColumn("ts", timestamp_seconds(col("vec_id")))
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "60 seconds"), col("centroid_id"))
+          .agg(count(lit(1)).as("n"))
+          .select(unix_timestamp(col("window.start")).as("ws"),
+            col("centroid_id"), col("n"))
+      }
     },
     Some(s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
       |        FROM embeddings),
@@ -1128,7 +1084,7 @@ object CrawlQueries {
     */
   val qStreamJsonlIngest = Fixture(
     "q_stream_jsonl_ingest",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import org.apache.spark.sql.types._
       val ev = Tables.events(s, d).select("event_id", "event_type", "user_id", "value")
       val dir = graft.sources.JsonIngest.stageJsonl(ev,
@@ -1143,23 +1099,14 @@ object CrawlQueries {
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("maxFilesPerTrigger", "1")
         .json(dir)
-      val out = stream
+      Replay.drain(stream
         .groupBy(coalesce(
           when(col("_corrupt_record").isNotNull, lit("__corrupt__")),
           col("event_type")).as("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(when(col("_corrupt_record").isNull,
-            floor(col("value") * lit(1e4) + lit(0.5)))).cast("long").as("sum_v4"))
-      val sink = s"stream_jsonl_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = out.writeStream.outputMode("complete")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+            floor(col("value") * lit(1e4) + lit(0.5)))).cast("long").as("sum_v4")),
+        "complete")
     },
     Some("""SELECT event_type, count(*) AS n_events,
       |   sum(floor(value * 10000 + 0.5))::BIGINT AS sum_v4
@@ -1383,49 +1330,32 @@ object CrawlQueries {
     */
   val qStreamCuration = Fixture(
     "q_stream_curation",
-    (s, d) => {
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val rows = Tables.documents(s, d)
         .select(col("doc_id").cast("long"), col("text"), col("source"))
         .as[(Long, String, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, String)]
-      // spread the replay across cores BEFORE the regex-heavy quality
-      // scoring: a MemoryStream addData block is ONE partition (a real
-      // source's scan splits provide this parallelism for free)
-      val stream = ms.toDF().repartition(16).toDF("doc_id", "text", "source")
-        .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
-        .where(Quant.q4(TextFunctions.qualityScore(col("text"))) >= 0.5)
-        .withWatermark("ts", "0 seconds")
-      val out = graft.streaming.StreamingFirstSeen
-        .firstSeen(stream, "text", "ts")
-        .groupBy(window(col("ts"), "60 seconds"), col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
-        .withColumn("ws", col("window.start").cast("long"))
-        .select("ws", "source", "n_docs", "n_tok")
-      val sink = s"stream_curation_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          // 2 chunks: the replay is doc_id-sorted, so first-seen keeps the
-          // min-doc_id copy under ANY chunking (first arrival = smallest
-          // id; within-batch ties go to minBy(doc_id)) — cross-batch state
-          // carry is exercised at 2 batches, extra triggers are overhead
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          // one more batch so the final chunk's watermark gets APPLIED
-          // (watermark updates lag one micro-batch)
-          ms.addData(Seq(rows.last))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      // 2 chunks: the replay is doc_id-sorted, so first-seen keeps the
+      // min-doc_id copy under ANY chunking (first arrival = smallest id;
+      // within-batch ties go to minBy(doc_id)) — cross-batch state carry is
+      // exercised at 2 batches, extra triggers are overhead; then one more
+      // batch so the final chunk's watermark gets APPLIED (watermark
+      // updates lag one micro-batch)
+      Replay.chunks(s, Replay.chunked(rows, 2) :+ Seq(rows.last)) { in =>
+        // spread the replay across cores BEFORE the regex-heavy quality
+        // scoring: a MemoryStream addData block is ONE partition (a real
+        // source's scan splits provide this parallelism for free)
+        val stream = in.repartition(16).toDF("doc_id", "text", "source")
+          .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
+          .where(Quant.q4(TextFunctions.qualityScore(col("text"))) >= 0.5)
+          .withWatermark("ts", "0 seconds")
+        graft.streaming.StreamingFirstSeen
+          .firstSeen(stream, "text", "ts")
+          .groupBy(window(col("ts"), "60 seconds"), col("source"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
+          .withColumn("ws", col("window.start").cast("long"))
+          .select("ws", "source", "n_docs", "n_tok")
+      }
     },
     Some(s"""WITH t AS (SELECT doc_id, source, text,
       |   len($wordsSql)::DOUBLE AS n_tok, length(text)::DOUBLE AS n_chars,
@@ -1456,12 +1386,13 @@ object CrawlQueries {
     */
   val qStreamCurationFiles = Fixture(
     "q_stream_curation_files",
-    (s, d) => {
+    // 16 state partitions: see the minhash-files note
+    (spark, d) => Replay(spark, partitions = 16, rocksDb = true) { s =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("source"))
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_replay_curation_${Integer.toHexString(d.hashCode)}").getAbsolutePath
-      graft.streaming.FileReplay.stageOrdered(docs, dir, "doc_id", 32,
+      FileReplay.stageOrdered(docs, dir, "doc_id", 32,
         tail = Some(docs.orderBy(col("doc_id").desc).limit(1)))
       val stream = s.readStream
         .schema("doc_id LONG, text STRING, source STRING")
@@ -1470,22 +1401,12 @@ object CrawlQueries {
         .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
         .where(Quant.q4(TextFunctions.qualityScore(col("text"))) >= 0.5)
         .withWatermark("ts", "0 seconds")
-      val out = graft.streaming.StreamingFirstSeen
+      Replay.drain(graft.streaming.StreamingFirstSeen
         .firstSeen(stream, "text", "ts")
         .groupBy(window(col("ts"), "60 seconds"), col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
         .withColumn("ws", col("window.start").cast("long"))
-        .select("ws", "source", "n_docs", "n_tok")
-      val sink = s"stream_curation_files_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "16") // see minhash-files note
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+        .select("ws", "source", "n_docs", "n_tok"))
     },
     qStreamCuration.oracle)
 
@@ -1540,7 +1461,7 @@ object CrawlQueries {
     */
   val qStreamSchemaEvolution = Fixture(
     "q_stream_schema_evolution",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       val h = Integer.toHexString(d.hashCode)
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_schema_evo_stream_$h").getAbsolutePath
@@ -1557,21 +1478,12 @@ object CrawlQueries {
         .schema("doc_id LONG, lang STRING, n_chars LONG, source STRING")
         .option("maxFilesPerTrigger", "1")
         .parquet(dir)
-      val out = stream.groupBy("lang")
+      Replay.drain(stream.groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("source").isNull, 1L).otherwise(0L)).as("n_legacy"),
           count(col("source")).as("n_evolved"),
-          sum("n_chars").as("sum_chars"))
-      val sink = s"stream_schevo_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = out.writeStream.outputMode("complete")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+          sum("n_chars").as("sum_chars")),
+        "complete")
     },
     qSchemaEvolution.oracle)
 
@@ -1868,32 +1780,23 @@ object CrawlQueries {
     * FILES (the natural arrival unit — a file is sequential inside, so the
     * record walk is per-file executor work exactly as in batch), exploded
     * to response records by the same [[graft.sources.Warc.ingestResponses]]
-    * path, so batch and stream share one parser. Stateless → ONE trigger;
-    * many addData blocks so the per-file parse fans across cores
-    * (MemoryStream = one partition per block). Oracle = the batch ingest
+    * path, so batch and stream share one parser. Stateless → ONE trigger,
+    * split 8 ways so the per-file parse fans across cores (a MemoryStream
+    * micro-batch is otherwise one partition). Oracle = the batch ingest
     * oracle: chunking cannot affect a stateless explode.
     */
   lazy val qStreamWarcIngest = Fixture(
     "q_stream_warc_ingest",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val files = graft.sources.Warc
         .syntheticWarcFiles(s, Tables.documents(s, d))
         .map(f => (f.file_id, f.warc))
         .collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Byte])]
-      val out = graft.sources.Warc.ingestResponses(s,
-        ms.toDS().map { case (id, bytes) => graft.sources.Warc.WarcFile(id, bytes) })
-      val sink = s"stream_warc_${System.nanoTime}"
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try {
-        files.grouped(math.max(1, files.length / 8 + 1)).foreach(c => ms.addData(c.toSeq))
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table(sink)
+      Replay.chunks(s, Seq(files.toSeq), numPartitions = Some(8)) { in =>
+        graft.sources.Warc.ingestResponses(s, in.as[(Long, Array[Byte])]
+          .map { case (id, bytes) => graft.sources.Warc.WarcFile(id, bytes) })
+      }
     },
     qWarcIngest.oracle)
 
@@ -2290,9 +2193,8 @@ object CrawlQueries {
     */
   val qStreamCdcUpsert = Fixture(
     "q_stream_cdc_upsert",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_cdclake_${System.nanoTime}").getAbsolutePath
       val docs = Tables.documents(s, d)
@@ -2308,15 +2210,11 @@ object CrawlQueries {
         .unionByName(docs.where(col("doc_id") % 7 === 3)
           .withColumn("doc_id", col("doc_id") + 1000000L)
           .withColumn("ver", lit(1L))))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, Long)]
-      val q = graft.streaming.StreamingUpsert.start(
-        ms.toDF().toDF("doc_id", "source", "n_chars", "ver"),
-        root, "doc_id", "ver", s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.chunksInto(s, Seq(b1, b2)) { in =>
+        graft.streaming.StreamingUpsert.start(
+          in.toDF("doc_id", "source", "n_chars", "ver"),
+          root, "doc_id", "ver", s"${root}_ckpt")
+      }
       graft.sources.SnapshotLake.read(s, root)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"),
@@ -2426,9 +2324,8 @@ object CrawlQueries {
     */
   val qStreamLakeMor = Fixture(
     "q_stream_lake_mor",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_morstream_${System.nanoTime}").getAbsolutePath
@@ -2459,16 +2356,12 @@ object CrawlQueries {
             col("doc_id") % 13 =!= 5 && col("doc_id") % 20 =!= 0)
           .select(col("doc_id"), col("source"), col("n_chars"),
             lit("D").as("op"), lit(2L).as("ver"))))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, String, Long)]
       val ckpt = s"${root}_ckpt"
-      val q = graft.streaming.StreamingUpsert.startMor(
-        ms.toDF().toDF("doc_id", "source", "n_chars", "op", "ver"),
-        root, "doc_id", "ver", ckpt)
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.chunksInto(s, Seq(b1, b2)) { in =>
+        graft.streaming.StreamingUpsert.startMor(
+          in.toDF("doc_id", "source", "n_chars", "op", "ver"),
+          root, "doc_id", "ver", ckpt)
+      }
       // crash-replay of the last batch: the per-writer watermark must SKIP
       val replayed = graft.streaming.StreamingUpsert.applyBatchMor(
         b2.toDF("doc_id", "source", "n_chars", "op", "ver"),

@@ -8,6 +8,7 @@ import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
 import graft.similarity.Ann
+import graft.streaming.{FileReplay, Replay}
 import OracleSql._
 import SketchQueries.{ivmDelta, ivmFinSql, ivmIns, qIvmKmvDistinct}
 
@@ -371,9 +372,8 @@ object MvQueries {
     */
   val qStreamMvServe = Fixture(
     "q_stream_mv_serve",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.plans.{MvRewrite, MvRegistry}
       import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
@@ -391,15 +391,11 @@ object MvQueries {
         df.as[(String, String, Option[Long], Option[Long])].collect().toSeq
       val b1 = rows(ivmDelta(docs.where(col("doc_id") % 2 === 0)))
       val b2 = rows(ivmDelta(docs.where(col("doc_id") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, Option[Long], Option[Long])]
-      val q = graft.streaming.StreamingIvm.start(
-        ms.toDF().toDF("lang", "op", "old_v", "new_v"),
-        root, Seq("lang"), s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.chunksInto(s, Seq(b1, b2)) { in =>
+        graft.streaming.StreamingIvm.start(
+          in.toDF("lang", "op", "old_v", "new_v"),
+          root, Seq("lang"), s"${root}_ckpt")
+      }
       val prev = s.experimental.extraOptimizations
       s.experimental.extraOptimizations = prev :+ MvRewrite()
       try {
@@ -503,9 +499,8 @@ object MvQueries {
     */
   val qStreamMvJoinServe = Fixture(
     "q_stream_mv_join_serve",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.plans.{MvRewrite, MvRegistry}
       import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
@@ -528,15 +523,11 @@ object MvQueries {
         df.as[(Long, String, Option[Double], Option[Double])].collect().toSeq
       val b1 = rows(liDelta(li.where(col("l_orderkey") % 2 === 0)))
       val b2 = rows(liDelta(li.where(col("l_orderkey") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Option[Double], Option[Double])]
-      val q = graft.streaming.StreamingIvm.startJoin(
-        ms.toDF().toDF("l_orderkey", "op", "old_v", "new_v"),
-        root, dims, Seq("o_orderpriority"), s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.chunksInto(s, Seq(b1, b2)) { in =>
+        graft.streaming.StreamingIvm.startJoin(
+          in.toDF("l_orderkey", "op", "old_v", "new_v"),
+          root, dims, Seq("o_orderpriority"), s"${root}_ckpt")
+      }
       val prev = s.experimental.extraOptimizations
       s.experimental.extraOptimizations = prev :+ MvRewrite()
       try {
@@ -627,9 +618,8 @@ object MvQueries {
     */
   val qStreamIvmDimDelta = Fixture(
     "q_stream_ivm_dim_delta",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val li = Tables.lineitem(s, d)
       val ords = Tables.orders(s, d)
       val root = new java.io.File(sys.props("java.io.tmpdir"),
@@ -655,18 +645,14 @@ object MvQueries {
         .as[(Long, String, Option[String], Option[String])].collect().toSeq
       val b1 = rows(deltaOf(ords.where(col("o_orderkey") % 2 === 0)))
       val b2 = rows(deltaOf(ords.where(col("o_orderkey") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Option[String], Option[String])]
-      val q = graft.streaming.StreamingIvm.startDimDelta(
-        ms.toDF().toDF("o_orderkey", "op", "old_o_orderpriority",
-          "new_o_orderpriority"),
-        root, li.select("l_orderkey", "l_quantity"), "l_orderkey",
-        "o_orderkey", Seq("o_orderpriority"), "l_quantity",
-        s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.chunksInto(s, Seq(b1, b2)) { in =>
+        graft.streaming.StreamingIvm.startDimDelta(
+          in.toDF("o_orderkey", "op", "old_o_orderpriority",
+            "new_o_orderpriority"),
+          root, li.select("l_orderkey", "l_quantity"), "l_orderkey",
+          "o_orderkey", Seq("o_orderpriority"), "l_quantity",
+          s"${root}_ckpt")
+      }
       graft.sources.SnapshotLake.read(s, root)
         .select(col("o_orderpriority"), col("cnt"),
           Quant.q4(col("sum_v")).as("sum_v"))
@@ -692,7 +678,7 @@ object MvQueries {
     */
   val qStreamIvmTwoWriters = Fixture(
     "q_stream_ivm_two_writers",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
@@ -943,9 +929,8 @@ object MvQueries {
     */
   val qStreamIvmJoinMinmax = Fixture(
     "q_stream_ivm_join_minmax",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
       val li = Tables.lineitem(s, d)
       val dims = Seq(Tables.orders(s, d) ->
@@ -976,7 +961,7 @@ object MvQueries {
           .select(concat(lit("ins-"), liRowId).as("rid"), col("l_orderkey"),
             lit("I").as("op"), lit(null).cast("double").as("old_v"),
             (col("l_quantity") + 7d).as("new_v")))
-      // FILE-SOURCE replay (graft.streaming.FileReplay): the two live
+      // FILE-SOURCE replay ([[FileReplay]]): the two live
       // chunks arrive as one staged parquet file per trigger, so every
       // micro-batch gets real scan splits — the bench then measures the
       // IVM fold, not a single-threaded driver addData feed; the staged
@@ -984,7 +969,7 @@ object MvQueries {
       val replayDir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_replay_jfull_${Integer.toHexString(d.hashCode)}")
         .getAbsolutePath
-      graft.streaming.FileReplay.stageChunks(
+      FileReplay.stageChunks(
         (0 to 1).map(i => deltaOf(li.where(col("l_orderkey") % 3 === i))),
         replayDir, "jfull_mod3")
       val stream = s.readStream
@@ -993,10 +978,9 @@ object MvQueries {
         .option("maxFilesPerTrigger", "1")
         .parquet(replayDir)
       val ckpt = s"$base/cp"
-      val q = graft.streaming.StreamingIvm.startJoinFull(
+      Replay.drainInto(graft.streaming.StreamingIvm.startJoinFull(
         stream, viewRoot, factRoot, "rid", dims, Seq("o_orderpriority"),
-        "l_quantity", ckpt)
-      try q.processAllAvailable() finally q.stop()
+        "l_quantity", ckpt))
       // TORN trigger 2: the fact half lands (simulated crash after the
       // row-store commit), then the whole fold re-delivers with the same
       // batchId — fact skips on the watermark, view folds post-batch
@@ -1029,9 +1013,8 @@ object MvQueries {
     */
   val qStreamMvJoinMinmaxServe = Fixture(
     "q_stream_mv_join_minmax_serve",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.plans.{MvRewrite, MvRegistry}
       import graft.plans.MvRegistry.AggDef
       import graft.sources.SnapshotLake
@@ -1072,7 +1055,7 @@ object MvQueries {
       val replayDir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_replay_jfmv_${Integer.toHexString(d.hashCode)}")
         .getAbsolutePath
-      graft.streaming.FileReplay.stageChunks(
+      FileReplay.stageChunks(
         (0 to 1).map(i => deltaOf(li.where(col("l_orderkey") % 2 === i))),
         replayDir, "jfmv_mod2")
       val stream = s.readStream
@@ -1080,10 +1063,9 @@ object MvQueries {
           "old_v DOUBLE, new_v DOUBLE")
         .option("maxFilesPerTrigger", "1")
         .parquet(replayDir)
-      val q = graft.streaming.StreamingIvm.startJoinFull(
+      Replay.drainInto(graft.streaming.StreamingIvm.startJoinFull(
         stream, viewRoot, factRoot, "rid", dims, Seq("o_orderpriority"),
-        "l_quantity", s"$base/cp")
-      try q.processAllAvailable() finally q.stop()
+        "l_quantity", s"$base/cp"))
       val prev = s.experimental.extraOptimizations
       s.experimental.extraOptimizations = prev :+ MvRewrite()
       try {
@@ -1124,9 +1106,8 @@ object MvQueries {
     */
   val qStreamIvmSnowflake = Fixture(
     "q_stream_ivm_snowflake",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
       val li = Tables.lineitem(s, d)
       val ords = Tables.orders(s, d).select("o_orderkey", "o_custkey")
@@ -1155,18 +1136,14 @@ object MvQueries {
         .as[(Long, String, Option[String], Option[String])].collect().toSeq
       val b1 = rows(deltaOf(cust.where(col("c_custkey") % 2 === 0)))
       val b2 = rows(deltaOf(cust.where(col("c_custkey") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Option[String], Option[String])]
       val ckpt = s"${root}_ckpt"
-      val q = graft.streaming.StreamingIvm.startSnowflakeDimDelta(
-        ms.toDF().toDF("c_custkey", "op", "old_c_mktsegment",
-          "new_c_mktsegment"),
-        root, li.select("l_orderkey", "l_quantity"), mids, "o_custkey",
-        "c_custkey", Seq("c_mktsegment"), "l_quantity", ckpt)
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.chunksInto(s, Seq(b1, b2)) { in =>
+        graft.streaming.StreamingIvm.startSnowflakeDimDelta(
+          in.toDF("c_custkey", "op", "old_c_mktsegment",
+            "new_c_mktsegment"),
+          root, li.select("l_orderkey", "l_quantity"), mids, "o_custkey",
+          "c_custkey", Seq("c_mktsegment"), "l_quantity", ckpt)
+      }
       // crash-replay of the last batch: same writer, same batchId — the
       // fold is not idempotent, so the watermark skip is load-bearing
       val replayed = graft.streaming.StreamingIvm.applyBatchSnowflake(
@@ -1673,9 +1650,8 @@ object MvQueries {
     */
   val qStreamIvmQuantile = Fixture(
     "q_stream_ivm_quantile",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.SnapshotLake
       val k = 64
       val li = Tables.lineitem(s, d)
@@ -1692,15 +1668,11 @@ object MvQueries {
         df.as[(String, String, String, Double)].collect().toSeq
       val b1 = rows(deltaOf(li.where(col("l_orderkey") % 2 === 0)))
       val b2 = rows(deltaOf(li.where(col("l_orderkey") % 2 === 1)))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, String, Double)]
-      val q = graft.streaming.StreamingIvm.startQuantile(
-        ms.toDF().toDF("l_returnflag", "op", "new_id", "new_v"),
-        root, Seq("l_returnflag"), k, s"${root}_ckpt")
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.chunksInto(s, Seq(b1, b2)) { in =>
+        graft.streaming.StreamingIvm.startQuantile(
+          in.toDF("l_returnflag", "op", "new_id", "new_v"),
+          root, Seq("l_returnflag"), k, s"${root}_ckpt")
+      }
       require(SnapshotLake.currentVersion(root).contains(2L),
         s"two triggers must commit v1, v2: ${SnapshotLake.currentVersion(root)}")
       qskServe(SnapshotLake.read(s, root))
@@ -1973,9 +1945,8 @@ object MvQueries {
     */
   val qStreamLakeZonemap = Fixture(
     "q_stream_lake_zonemap",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.sources.{SnapshotLake, ZoneMap}
       val root = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_zmcdc_${System.nanoTime}").getAbsolutePath
@@ -1993,16 +1964,12 @@ object MvQueries {
         .unionByName(docs.where(col("doc_id") % 7 === 3)
           .withColumn("doc_id", col("doc_id") + 1000000L)
           .withColumn("ver", lit(1L))))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, Long)]
-      val q = graft.streaming.StreamingUpsert.startWithStats(
-        ms.toDF().toDF("doc_id", "source", "n_chars", "ver"),
-        root, "doc_id", "ver", s"${root}_ckpt", Seq("doc_id"),
-        sortWithinFiles = Some("doc_id"), numFiles = 8)
-      try {
-        ms.addData(b1); q.processAllAvailable()
-        ms.addData(b2); q.processAllAvailable()
-      } finally q.stop()
+      Replay.chunksInto(s, Seq(b1, b2)) { in =>
+        graft.streaming.StreamingUpsert.startWithStats(
+          in.toDF("doc_id", "source", "n_chars", "ver"),
+          root, "doc_id", "ver", s"${root}_ckpt", Seq("doc_id"),
+          sortWithinFiles = Some("doc_id"), numFiles = 8)
+      }
       require(SnapshotLake.currentVersion(root).contains(2L),
         s"two triggers must commit v1, v2: ${SnapshotLake.currentVersion(root)}")
       val vp = SnapshotLake.versionPath(root, 2L)
@@ -2042,38 +2009,24 @@ object MvQueries {
     */
   val qStreamFunnel = Fixture(
     "q_stream_funnel",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val stepNames = Seq("view", "click", "purchase")
       val rows = Tables.events(s, d)
         .select(unix_micros(col("ts")), col("user_id").cast("long"),
           col("event_type"))
         .as[(Long, Long, String)].collect().sortBy(_._1)
       val lastStep = rows.reverse.find(r => stepNames.contains(r._3)).get
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"funnel_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.StreamingFunnel.userDepth(stream, "ts",
-            "user_id", "event_type", stepNames, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq); q.processAllAvailable()
-          }
-          // the final watermark only advances on a STEP event (the type
-          // filter sits below the watermark node)
-          ms.addData(Seq(lastStep)); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // the final watermark only advances on a STEP event (the type filter
+      // sits below the watermark node)
+      val out = Replay.chunks(s, Replay.chunked(rows, 2) :+ Seq(lastStep)) { in =>
+        graft.streaming.StreamingFunnel.userDepth(
+          in.toDF("tsu", "user_id", "event_type")
+            .withColumn("ts", timestamp_micros(col("tsu"))),
+          "ts", "user_id", "event_type", stepNames, 86400L)
+      }
       val names = array(stepNames.map(lit): _*)
-      s.table(sink)
+      out
         .select(col("ws"), explode(sequence(lit(1), col("depth"))).as("step"))
         .groupBy("ws", "step")
         .agg(count(lit(1)).as("n_users"))
@@ -2112,6 +2065,18 @@ object MvQueries {
       | UNION ALL SELECT ws, 2::BIGINT, 'click', s2 FROM sc WHERE s2 > 0
       | UNION ALL SELECT ws, 3::BIGINT, 'purchase', s3 FROM sc WHERE s3 > 0""".stripMargin))
 
+  /** Event-time-sorted `rows` in two chunks cut at a STRICT increase of
+    * `t` past the middle: transformWithState drops input at-or-below the
+    * watermark, so a chunk boundary inside an equal-timestamp run would
+    * silently lose the tail rows.
+    */
+  private def strictHalves[A](rows: collection.IndexedSeq[A])(
+      t: A => Long): Seq[Seq[A]] = {
+    var cut = rows.length / 2
+    while (cut < rows.length && t(rows(cut)) == t(rows(cut - 1))) cut += 1
+    Seq(rows.take(cut).toSeq, rows.drop(cut).toSeq).filter(_.nonEmpty)
+  }
+
   /** PROGRESSIVE funnel — FINAL markers
     * ([[graft.streaming.StreamingFunnel.userDepthLive]] with event-time
     * timer eviction): the live variant emits per-trigger provisional
@@ -2124,46 +2089,25 @@ object MvQueries {
     */
   val qStreamFunnelFinal = Fixture(
     "q_stream_funnel_final",
-    (s, d) => {
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val stepNames = Seq("view", "click", "purchase")
       val rows = Tables.events(s, d)
         .select(unix_micros(col("ts")), col("user_id").cast("long"),
           col("event_type"))
         .as[(Long, Long, String)].collect().sortBy(_._1)
       val lastStep = rows.reverse.find(r => stepNames.contains(r._3)).get
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"funnel_fin_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // timers + value state = multiple column families: RocksDB only
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = graft.streaming.StreamingFunnel.userDepthLive(stream, "ts",
-            "user_id", "event_type", stepNames, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          // split at a STRICT time increase: transformWithState drops
-          // input at-or-below the watermark, so a chunk boundary inside
-          // an equal-timestamp run would silently lose the tail rows
-          var cut = rows.length / 2
-          while (cut < rows.length && rows(cut)._1 == rows(cut - 1)._1)
-            cut += 1
-          Seq(rows.take(cut), rows.drop(cut)).filter(_.nonEmpty)
-            .foreach { chunk =>
-              ms.addData(chunk.toSeq); q.processAllAvailable()
-            }
-          // the final watermark only advances on a STEP event (the type
-          // filter sits below the watermark node)
-          ms.addData(Seq(lastStep)); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // timers + value state = multiple column families: RocksDB only;
+      // the final watermark only advances on a STEP event (the type filter
+      // sits below the watermark node)
+      val out = Replay.chunks(s, strictHalves(rows)(_._1) :+ Seq(lastStep)) { in =>
+        graft.streaming.StreamingFunnel.userDepthLive(
+          in.toDF("tsu", "user_id", "event_type")
+            .withColumn("ts", timestamp_micros(col("tsu"))),
+          "ts", "user_id", "event_type", stepNames, 86400L)
+      }
       val names = array(stepNames.map(lit): _*)
-      s.table(sink)
+      out
         .where(col("fin"))
         .select(col("ws"), explode(sequence(lit(1), col("depth"))).as("step"))
         .groupBy("ws", "step")
@@ -2227,9 +2171,8 @@ object MvQueries {
     */
   val qStreamPatternMatch = Fixture(
     "q_stream_pattern_match",
-    (s, d) => {
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.Pattern
       val steps = Seq(
         Pattern.Step("signup", col("event_type") === "signup"),
@@ -2244,29 +2187,16 @@ object MvQueries {
         r._3 == "signup" || r._3 == "error" ||
           (r._3 == "purchase" && r._4 > 50)
       val lastStep = rows.reverse.find(flagged).get
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String, Double)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type", "value")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"pattern_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.StreamingPattern.keyMatch(stream, "ts",
-            "user_id", steps, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq); q.processAllAvailable()
-          }
-          // the final watermark only advances on a FLAGGED event (the
-          // flag filter sits below the watermark node)
-          ms.addData(Seq(lastStep)); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // the final watermark only advances on a FLAGGED event (the flag
+      // filter sits below the watermark node)
+      val out = Replay.chunks(s, Replay.chunked(rows, 2) :+ Seq(lastStep)) { in =>
+        graft.streaming.StreamingPattern.keyMatch(
+          in.toDF("tsu", "user_id", "event_type", "value")
+            .withColumn("ts", timestamp_micros(col("tsu"))),
+          "ts", "user_id", steps, 86400L)
+      }
       val names = array(steps.map(st => lit(st.name)): _*)
-      s.table(sink)
+      out
         .select(col("ws"), explode(sequence(lit(1), col("depth"))).as("step"))
         .groupBy("ws", "step")
         .agg(count(lit(1)).as("n_keys"))
@@ -2648,9 +2578,8 @@ object MvQueries {
     */
   val qStreamPatternNfaAll = Fixture(
     "q_stream_pattern_nfa_all",
-    (s, d) => {
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.Pattern
       val steps = Seq(
         Pattern.RunStep("p1", col("event_type") === "purchase"),
@@ -2659,31 +2588,12 @@ object MvQueries {
         .select(unix_micros(col("ts")), col("user_id").cast("long"),
           col("event_type"))
         .as[(Long, Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"pattern_nfa_all_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = graft.streaming.StreamingPatternNfa.allMatches(stream,
-            "ts", "user_id", steps, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          // split at a STRICT time increase (transformWithState drops
-          // input at-or-below the watermark)
-          var cut = rows.length / 2
-          while (cut < rows.length && rows(cut)._1 == rows(cut - 1)._1)
-            cut += 1
-          Seq(rows.take(cut), rows.drop(cut)).filter(_.nonEmpty)
-            .foreach { chunk =>
-              ms.addData(chunk.toSeq); q.processAllAvailable()
-            }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, strictHalves(rows)(_._1)) { in =>
+        graft.streaming.StreamingPatternNfa.allMatches(
+          in.toDF("tsu", "user_id", "event_type")
+            .withColumn("ts", timestamp_micros(col("tsu"))),
+          "ts", "user_id", steps, 86400L)
+      }
         .select(col("ws"), col("u").as("user_id"), col("match_no"),
           col("m_start"), col("m_end"))
     },
@@ -2789,9 +2699,8 @@ object MvQueries {
     */
   val qStreamPatternNfa = Fixture(
     "q_stream_pattern_nfa",
-    (s, d) => {
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.operators.Pattern
       val steps = Seq(
         Pattern.RunStep("engage",
@@ -2803,33 +2712,15 @@ object MvQueries {
         .select(unix_micros(col("ts")), col("user_id").cast("long"),
           col("event_type"), col("value"))
         .as[(Long, Long, String, Double)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String, Double)]
-      val stream = ms.toDF().toDF("tsu", "user_id", "event_type", "value")
-        .withColumn("ts", timestamp_micros(col("tsu")))
-      val sink = s"pattern_nfa_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = graft.streaming.StreamingPatternNfa.firstMatch(stream,
-            "ts", "user_id", steps, 86400L)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        try {
-          // split at a STRICT time increase (transformWithState drops
-          // input at-or-below the watermark)
-          var cut = rows.length / 2
-          while (cut < rows.length && rows(cut)._1 == rows(cut - 1)._1)
-            cut += 1
-          Seq(rows.take(cut), rows.drop(cut)).filter(_.nonEmpty)
-            .foreach { chunk =>
-              ms.addData(chunk.toSeq); q.processAllAvailable()
-            }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val out = Replay.chunks(s, strictHalves(rows)(_._1)) { in =>
+        graft.streaming.StreamingPatternNfa.firstMatch(
+          in.toDF("tsu", "user_id", "event_type", "value")
+            .withColumn("ts", timestamp_micros(col("tsu"))),
+          "ts", "user_id", steps, 86400L)
+      }
       // native-typed keys: `u` comes back as the long it went in as —
       // no cast-back (r18 seam #3 closed)
-      s.table(sink)
+      out
         .select(col("ws"), col("u").as("user_id"),
           col("m_start"), col("m_end"))
     },

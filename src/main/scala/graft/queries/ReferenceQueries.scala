@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators._
+import graft.streaming.{FileReplay, Replay}
 import SqlGen._
 
 /** The reference's application queries (SURVEY §2/§5, FIXTURES.md §3) plus
@@ -667,38 +668,22 @@ object ReferenceQueries {
     */
   val qStreamSession = Fixture(
     "q_stream_session_window",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val rows = Tables.events(s, d)
         .select(unix_micros(col("ts")), col("user_id"), col("value"))
         .as[(Long, Long, Double)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double)]
-      val stream = ms.toDF().toDF("eu", "user_id", "value")
-        .withColumn("ts", timestamp_micros(col("eu")))
-      val agg = stream.withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), "1800 seconds"), col("user_id"))
-        .agg(AggSpec(AggFn.Cnt, col("value"), "cnt").toColumn,
-             AggSpec(AggFn.Sum, col("value"), "sum_v", Some(4)).toColumn)
-        .withColumn("ss", unix_micros(col("session_window.start")))
-        .select("ss", "user_id", "cnt", "sum_v")
-      val sink = s"stream_session_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last)) // apply the final watermark
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      // the resent last row applies the final watermark
+      Replay.chunks(s, Replay.chunked(rows, 2) :+ Seq(rows.last)) { in =>
+        in.toDF("eu", "user_id", "value")
+          .withColumn("ts", timestamp_micros(col("eu")))
+          .withWatermark("ts", "0 seconds")
+          .groupBy(session_window(col("ts"), "1800 seconds"), col("user_id"))
+          .agg(AggSpec(AggFn.Cnt, col("value"), "cnt").toColumn,
+               AggSpec(AggFn.Sum, col("value"), "sum_v", Some(4)).toColumn)
+          .withColumn("ss", unix_micros(col("session_window.start")))
+          .select("ss", "user_id", "cnt", "sum_v")
+      }
     },
     Some("""WITH src AS (SELECT user_id, epoch_us(ts::TIMESTAMP) AS eu, value FROM events),
       | mx AS (SELECT (max(eu) // 1000) * 1000 AS wm FROM src),
@@ -732,46 +717,30 @@ object ReferenceQueries {
     */
   val qStreamYsb = Fixture(
     "q_stream_ysb_pipeline",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val rows = Tables.events(s, d).where(col("event_type") === "view")
         .select(unix_micros(col("ts")), col("event_type"), col("event_id"))
         .as[(Long, String, Long)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long)]
-      val stream = ms.toDF().toDF("eu", "event_type", "event_id")
-        .withColumn("ts", timestamp_micros(col("eu")))
-        .filter(col("event_type") === "view")
-        .select(col("ts"), expr("unix_micros(ts) div 1000000").as("es"),
-          pmod(col("event_id"), lit(1000)).as("ad_id"))
       val campaigns = Tables.part(s, d).select(
         pmod(col("p_partkey"), lit(1000)).as("ad_id"),
         pmod(col("p_partkey"), lit(37)).as("campaign_id"))
-      val joined = Joins
-        .staticBroadcast(stream, campaigns, stream("ad_id") === campaigns("ad_id"))
-        .drop("ad_id")
-      val agg = graft.streaming.Streams.windowAgg(
-        joined, 100, 100, Seq("campaign_id"),
-        Seq(AggSpec(AggFn.Cnt, col("es"), "cnt"),
-            AggSpec(AggFn.Max, col("es"), "max_ts")),
-        watermark = Some("0 seconds"))
-      val sink = s"stream_ysb_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last)) // apply the final watermark
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      // the resent last row applies the final watermark
+      Replay.chunks(s, Replay.chunked(rows, 2) :+ Seq(rows.last)) { in =>
+        val stream = in.toDF("eu", "event_type", "event_id")
+          .withColumn("ts", timestamp_micros(col("eu")))
+          .filter(col("event_type") === "view")
+          .select(col("ts"), expr("unix_micros(ts) div 1000000").as("es"),
+            pmod(col("event_id"), lit(1000)).as("ad_id"))
+        val joined = Joins
+          .staticBroadcast(stream, campaigns, stream("ad_id") === campaigns("ad_id"))
+          .drop("ad_id")
+        graft.streaming.Streams.windowAgg(
+          joined, 100, 100, Seq("campaign_id"),
+          Seq(AggSpec(AggFn.Cnt, col("es"), "cnt"),
+              AggSpec(AggFn.Max, col("es"), "max_ts")),
+          watermark = Some("0 seconds"))
+      }
     },
     Some(s"""WITH c AS (SELECT p_partkey % 1000 AS ad_id, p_partkey % 37 AS campaign_id FROM part),
       | e AS (SELECT ${es("ts")} AS es, epoch_us(ts::TIMESTAMP) AS eu, event_id % 1000 AS ad_id
@@ -826,66 +795,41 @@ object ReferenceQueries {
     * decimal formatting is compared digit-for-digit. SURVEY §1.5 maps
     * LongLong → Long where values fit; this pins the wide path.
     */
-  /** Replay harness for the streaming-under-batch-oracle fixtures: `events`
-    * rows (µs epoch, event_type, value) collected, event-time-sorted, and
-    * fed to `buildAgg`'s streaming query as four micro-batches through a
-    * MemoryStream, append mode. The driver-side collect feeds the REPLAY
-    * only (test-harness pattern, same as StreamBench) — the operator under
-    * test is a real stateful streaming aggregation. After the replay one
-    * more batch re-sends a max-timestamp row: the final watermark (= max
-    * event time − delay, computed at a batch's END) is applied by the NEXT
-    * batch, and while a no-data micro-batch normally does that
-    * (spark.sql.streaming.noDataMicroBatches.enabled), the resend guarantees
-    * it independent of that conf; the row lands in the last, still-open
-    * window, which is never emitted, so it cannot perturb output. Which rows
-    * share a micro-batch affects emission timing only, never the aggregate
-    * values — the replay chunking is not load-bearing, so the replay uses
-    * TWO chunks: enough to exercise cross-batch state carry (plus the tail
-    * trigger), without paying micro-batch overhead four times per attempt
-    * (~1 s/fixture at sf0.1 across the 150-query bench). Fixtures whose
-    * CUSTOM state semantics could see batch boundaries (first-seen keeper
-    * choice, ring eviction in the θ-joins, count windows) keep 4 chunks.
+  /** The `events` input of the streaming-under-batch-oracle fixtures:
+    * rows (µs epoch, event_type, value, user_id) collected, event-time-
+    * sorted, and fed to `query`'s streaming query through [[Replay]] as two
+    * micro-batches. The driver-side collect feeds the REPLAY only — the
+    * operator under test is a real stateful streaming aggregation. After
+    * the replay one more batch re-sends a max-timestamp row: the final
+    * watermark (= max event time − delay, computed at a batch's END) is
+    * applied by the NEXT batch, and while a no-data micro-batch normally
+    * does that (spark.sql.streaming.noDataMicroBatches.enabled), the resend
+    * guarantees it independent of that conf; the row lands in the last,
+    * still-open window, which is never emitted, so it cannot perturb
+    * output. Which rows share a micro-batch affects emission timing only,
+    * never the aggregate values — TWO chunks exercise cross-batch state
+    * carry (plus the tail trigger) without paying micro-batch overhead four
+    * times per attempt. Fixtures whose CUSTOM state semantics could see
+    * batch boundaries (first-seen keeper choice, ring eviction in the
+    * θ-joins, count windows) keep 4 chunks.
     */
-  private def replayEvents(s: SparkSession, d: String, sinkPrefix: String)(
-      buildAgg: DataFrame => DataFrame): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+  private def eventsReplay(spark: SparkSession, d: String)(
+      query: DataFrame => DataFrame): DataFrame = Replay(spark) { s =>
     import s.implicits._
     val rows = Tables.events(s, d)
       .select(unix_micros(col("ts")), col("event_type"), col("value"),
         col("user_id").cast("long"))
       .as[(Long, String, Double, Long)].collect().sortBy(_._1)
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Double, Long)]
-    val stream = ms.toDF().toDF("tsu", "event_type", "value", "user_id")
-      .withColumn("ts", timestamp_micros(col("tsu")))
-    // unique sink name: attempts in the same session must not collide
-    val sink = s"${sinkPrefix}_${System.nanoTime}"
-    // Streaming STATE partitioning is a deployment knob fixed at first run,
-    // not a data-scaled shuffle: every stateful operator writes state/delta
-    // files per partition per micro-batch, so 32 partitions on a replay this
-    // size is pure checkpoint-I/O overhead (measured 16 s → ~5 s for the
-    // chained paned fixture at sf0.1). Size it to the replay and restore.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = buildAgg(stream).writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try {
-        rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-          ms.addData(chunk.toSeq)
-          q.processAllAvailable()
-        }
-        ms.addData(Seq(rows.last)) // apply the final watermark (see above)
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(sink)
+    Replay.chunks(s, Replay.chunked(rows, 2) :+ Seq(rows.last)) { in =>
+      query(in.toDF("tsu", "event_type", "value", "user_id")
+        .withColumn("ts", timestamp_micros(col("tsu"))))
+    }
   }
 
   /** The PRODUCTION streaming path — append mode + watermark — under the
     * batch oracle: tumbling 1 h windows keyed by event_type, CNT + SUM,
     * watermark delay 0, via [[graft.streaming.Streams.windowAgg]] over the
-    * [[replayEvents]] harness. Append mode emits a window exactly once, when
+    * [[eventsReplay]] input. Append mode emits a window exactly once, when
     * the watermark passes its END — so the emitted set is exactly the
     * windows with end ≤ max event time, and the oracle filters identically.
     * Complements StreamingSpec (paned/native equivalence, late-data drops):
@@ -893,7 +837,7 @@ object ReferenceQueries {
     */
   val qStreamTumbling = Fixture(
     "q_stream_tumbling_agg",
-    (s, d) => replayEvents(s, d, "stream_tumbling") { stream =>
+    (s, d) => eventsReplay(s, d) { stream =>
       graft.streaming.Streams.windowAgg(
         stream, 3600, 3600, Seq("event_type"),
         Seq(AggSpec(AggFn.Cnt, col("value"), "cnt"),
@@ -911,7 +855,7 @@ object ReferenceQueries {
       | HAVING (ws + 3600) * 1000000 <= (SELECT mx FROM mx)""".stripMargin))
 
   /** LightSaber's pane trick on the production streaming path, under the
-    * batch oracle: [[replayEvents]] through
+    * batch oracle: [[eventsReplay]] through
     * [[graft.streaming.Streams.windowAggPaned]] — tumbling 10-min pane
     * partials chained into a sliding (1 h, 10 min) stateful merge (Spark
     * 3.4+ multi-stateful-operator watermark propagation), append mode,
@@ -923,7 +867,7 @@ object ReferenceQueries {
     */
   val qStreamSlidingPaned = Fixture(
     "q_stream_sliding_paned",
-    (s, d) => replayEvents(s, d, "stream_sliding_paned") { stream =>
+    (s, d) => eventsReplay(s, d) { stream =>
       graft.streaming.Streams.windowAggPaned(
         stream, 3600, 600, Seq("event_type"),
         Seq(AggSpec(AggFn.Cnt, col("value"), "cnt"),
@@ -949,7 +893,7 @@ object ReferenceQueries {
     */
   val qStreamWeightedAvg = Fixture(
     "q_stream_weighted_avg",
-    (s, d) => replayEvents(s, d, "stream_wavg") { stream =>
+    (s, d) => eventsReplay(s, d) { stream =>
       val e = stream.withColumn("w",
         (pmod(col("user_id"), lit(5)) + lit(1)).cast("double"))
       graft.streaming.Streams.windowAgg(
@@ -977,7 +921,7 @@ object ReferenceQueries {
     */
   val qStreamHaving = Fixture(
     "q_stream_having",
-    (s, d) => replayEvents(s, d, "stream_having") { stream =>
+    (s, d) => eventsReplay(s, d) { stream =>
       graft.streaming.Streams.windowAgg(
         stream, 3600, 3600, Seq("user_id"),
         Seq(AggSpec(AggFn.Sum, col("value"), "sum_v", Some(4))),
@@ -1053,41 +997,26 @@ object ReferenceQueries {
     */
   val qStreamGapFill = Fixture(
     "q_stream_gap_fill",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
       val src = Tables.events(s, d).where(col("user_id") % 199 === 0)
         .select(col("event_type"),
           graft.operators.TimeWindows.epochSeconds(col("ts")).as("es"),
           col("value"), unix_micros(col("ts")).as("eu"))
       val rows = src.as[(String, Long, Double, Long)].collect().sortBy(_._4)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Long, Double, Long)]
-      val stream = ms.toDF().toDF("event_type", "es", "value", "eu")
-        .withColumn("ts", timestamp_micros(col("eu")))
-      val out = graft.streaming.StreamingGapFill
-        .tumblingWithBubbles(s, stream, 3600, watermarkDelaySec = 0L)
-        .select(col("event_type"), col("ws"), col("cnt"),
-          Quant.q4(col("sum_v")).as("sum_v"))
-      val sink = s"stream_gap_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last)) // apply the final watermark
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // the resent last row applies the final watermark
+      val out = Replay.chunks(s, Replay.chunked(rows, 4) :+ Seq(rows.last)) { in =>
+        graft.streaming.StreamingGapFill
+          .tumblingWithBubbles(s, in.toDF("event_type", "es", "value", "eu")
+            .withColumn("ts", timestamp_micros(col("eu"))),
+            3600, watermarkDelaySec = 0L)
+          .select(col("event_type"), col("ws"), col("cnt"),
+            Quant.q4(col("sum_v")).as("sum_v"))
+      }
       // spine trim: per-key last DATA window, from the same batch relation
       val hi = src.groupBy("event_type")
         .agg(max(expr("(es div 3600) * 3600")).as("__hi"))
-      s.table(sink).join(broadcast(hi), "event_type")
+      out.join(broadcast(hi), "event_type")
         .where(col("ws") <= col("__hi")).drop("__hi")
     },
     Some(s"""WITH src AS (SELECT ${es("ts")} AS es, epoch_us(ts::TIMESTAMP) AS eu,
@@ -1116,32 +1045,17 @@ object ReferenceQueries {
     */
   val qStreamCountWindow = Fixture(
     "q_stream_count_window",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
       val rows = Tables.eventsWithEpoch(s, d)
         .select(col("user_id"), col("es"), col("event_id"), col("value"))
         .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._2, r._3))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Long, Double)]
-      val stream = ms.toDF().toDF("user_id", "es", "event_id", "value")
-      val out = graft.streaming.StreamingCountWindows.tumbling(s, stream, 10)
-        .select(col("user_id"), col("wid"), col("cnt"),
-          Quant.q4(col("sum_v")).as("sum_v"))
-      val sink = s"stream_count_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, Replay.chunked(rows, 4)) { in =>
+        graft.streaming.StreamingCountWindows
+          .tumbling(s, in.toDF("user_id", "es", "event_id", "value"), 10)
+          .select(col("user_id"), col("wid"), col("cnt"),
+            Quant.q4(col("sum_v")).as("sum_v"))
+      }
     },
     Some(s"""WITH src AS (SELECT ${es("ts")} AS es, event_id, user_id, value FROM events),
       | w AS (SELECT user_id, value,
@@ -1150,6 +1064,25 @@ object ReferenceQueries {
       | SELECT user_id, wid, count(*) AS cnt,
       |   ${Quant.sql("sum(value)")} AS sum_v
       | FROM w GROUP BY 1, 2 HAVING count(*) = 10""".stripMargin))
+
+  /** Clicks ⋈ same-user purchases within [l_es, l_es + 600 s], both
+    * branches filtered from ONE replayed stream `src` (es, event_type,
+    * event_id, user_id) — [[qStreamJoinTheta]] and its file-source twin.
+    */
+  private def streamThetaJoin(src: DataFrame): DataFrame = {
+    val l = src.where(col("event_type") === "click")
+      .select(timestamp_seconds(col("es")).as("l_ts"),
+        col("event_id").as("l_id"), col("user_id"))
+    val r = src.where(col("event_type") === "purchase")
+      .select(timestamp_seconds(col("es")).as("r_ts"),
+        col("event_id").as("r_id"), col("user_id").as("r_user"))
+    graft.streaming.Streams.windowedThetaJoin(
+        l, r, "l_ts", "r_ts", 600,
+        col("user_id") === col("r_user"), "2 hours")
+      .select(col("user_id"), col("l_id"), col("r_id"),
+        expr("unix_micros(l_ts) div 1000000").as("l_es"),
+        expr("unix_micros(r_ts) div 1000000").as("r_es"))
+  }
 
   /** The stream-stream windowed θ-join (reference ThetaJoin, J2) on the
     * PRODUCTION streaming path — StreamingSymmetricHashJoinExec via
@@ -1167,41 +1100,14 @@ object ReferenceQueries {
     */
   val qStreamJoinTheta = Fixture(
     "q_stream_join_theta",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val rows = Tables.eventsWithEpoch(s, d)
         .select(col("es"), col("event_type"), col("event_id"), col("user_id"))
         .as[(Long, String, Long, Long)].collect().sortBy(r => (r._1, r._3))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, Long)]
-      val src = ms.toDF().toDF("es", "event_type", "event_id", "user_id")
-      val l = src.where(col("event_type") === "click")
-        .select(timestamp_seconds(col("es")).as("l_ts"),
-          col("event_id").as("l_id"), col("user_id"))
-      val r = src.where(col("event_type") === "purchase")
-        .select(timestamp_seconds(col("es")).as("r_ts"),
-          col("event_id").as("r_id"), col("user_id").as("r_user"))
-      val joined = graft.streaming.Streams.windowedThetaJoin(
-          l, r, "l_ts", "r_ts", 600,
-          col("user_id") === col("r_user"), "2 hours")
-        .select(col("user_id"), col("l_id"), col("r_id"),
-          expr("unix_micros(l_ts) div 1000000").as("l_es"),
-          expr("unix_micros(r_ts) div 1000000").as("r_es"))
-      val sink = s"stream_join_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, Replay.chunked(rows, 4)) { in =>
+        streamThetaJoin(in.toDF("es", "event_type", "event_id", "user_id"))
+      }
     },
     Some(s"""WITH e AS (SELECT ${es("ts")} AS es, event_id, user_id, event_type FROM events),
       | l AS (SELECT es AS l_es, event_id AS l_id, user_id FROM e WHERE event_type = 'click'),
@@ -1222,41 +1128,20 @@ object ReferenceQueries {
     */
   val qStreamJoinThetaFiles = Fixture(
     "q_stream_join_theta_files",
-    (s, d) => {
+    // 16 state partitions: join state partitions parallelize; results are
+    // invariant
+    (spark, d) => Replay(spark, partitions = 16) { s =>
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_replay_theta_${Integer.toHexString(d.hashCode)}").getAbsolutePath
-      graft.streaming.FileReplay.stageOrdered(
+      FileReplay.stageOrdered(
         Tables.eventsWithEpoch(s, d)
           .select((col("es") * lit(10000000L) + col("event_id")).as("ord"),
             col("es"), col("event_type"), col("event_id"), col("user_id")),
         dir, "ord", 32)
-      val src = s.readStream
+      Replay.drain(streamThetaJoin(s.readStream
         .schema("ord LONG, es LONG, event_type STRING, event_id LONG, user_id LONG")
         .option("maxFilesPerTrigger", "16")
-        .parquet(dir)
-      val l = src.where(col("event_type") === "click")
-        .select(timestamp_seconds(col("es")).as("l_ts"),
-          col("event_id").as("l_id"), col("user_id"))
-      val r = src.where(col("event_type") === "purchase")
-        .select(timestamp_seconds(col("es")).as("r_ts"),
-          col("event_id").as("r_id"), col("user_id").as("r_user"))
-      val joined = graft.streaming.Streams.windowedThetaJoin(
-          l, r, "l_ts", "r_ts", 600,
-          col("user_id") === col("r_user"), "2 hours")
-        .select(col("user_id"), col("l_id"), col("r_id"),
-          expr("unix_micros(l_ts) div 1000000").as("l_es"),
-          expr("unix_micros(r_ts) div 1000000").as("r_es"))
-      val sink = s"stream_join_files_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      // 16: join state partitions parallelize; results are invariant
-      s.conf.set("spark.sql.shuffle.partitions", "16")
-      try {
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+        .parquet(dir)))
     },
     qStreamJoinTheta.oracle)
 
@@ -1273,8 +1158,7 @@ object ReferenceQueries {
     */
   val qStreamJoinThetaRow = Fixture(
     "q_stream_join_theta_rowwin",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
       val rows = Tables.eventsWithEpoch(s, d)
         .where(col("event_type").isin("click", "purchase"))
@@ -1283,27 +1167,13 @@ object ReferenceQueries {
           (col("event_type") === "click").as("left"),
           col("user_id").as("key"), col("es").as("ts"), col("event_id").as("id"))
         .as[(Long, Boolean, Long, Long, Long)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Boolean, Long, Long, Long)]
-      val tagged = ms.toDF().toDF("ord", "left", "key", "ts", "id")
-      val out = graft.streaming.StreamingThetaJoin
-        .rowWindowedTheta(s, tagged, leftRows = 400, rightRows = 300)
-        .select(col("key").as("user_id"), col("l_id"), col("r_id"),
-          col("l_ts").as("l_es"), col("r_ts").as("r_es"))
-      val sink = s"stream_join_row_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, Replay.chunked(rows, 4)) { in =>
+        graft.streaming.StreamingThetaJoin
+          .rowWindowedTheta(s, in.toDF("ord", "left", "key", "ts", "id"),
+            leftRows = 400, rightRows = 300)
+          .select(col("key").as("user_id"), col("l_id"), col("r_id"),
+            col("l_ts").as("l_es"), col("r_ts").as("r_es"))
+      }
     },
     qJoinThetaRow.oracle)
 
@@ -1335,7 +1205,7 @@ object ReferenceQueries {
     */
   val qStreamTopK = Fixture(
     "q_stream_topk_per_group",
-    (s, d) => replayEvents(s, d, "stream_topk") { stream =>
+    (s, d) => eventsReplay(s, d) { stream =>
       stream.withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "3600 seconds"), col("event_type"))
         .agg(graft.functions.TopKAgg.topK(
@@ -1359,45 +1229,26 @@ object ReferenceQueries {
 
   val qStreamHotItems = Fixture(
     "q_stream_hot_items",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val rows = Tables.events(s, d)
         .select(unix_micros(col("ts")), col("event_id"))
         .as[(Long, Long)].collect().sortBy(identity)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long)]
-      val stream = ms.toDF().toDF("eu", "event_id")
-        .select(timestamp_micros(col("eu")).as("ts"),
-          pmod(col("event_id"), lit(4)).as("auction"))
-        .withWatermark("ts", "0 seconds")
-      val s1 = stream
-        .groupBy(window(col("ts"), "3600 seconds").as("w0"), col("auction"))
-        .agg(count(lit(1)).as("cnt"))
-      val out = s1
-        .groupBy(window(col("w0"), "3600 seconds"))
-        .agg(max(col("cnt")).as("mx"),
-          collect_list(struct(col("cnt"), col("auction"))).as("items"))
-        .select(col("window.start").cast("long").as("ws"), col("mx"),
-          explode(col("items")).as("it"))
-        .where(col("it.cnt") === col("mx"))
-        .select(col("ws"), col("it.auction").as("auction"), col("it.cnt").as("cnt"))
-      val sink = s"stream_hot_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try {
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-          ms.addData(Seq(rows.last))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, Replay.chunked(rows, 2) :+ Seq(rows.last)) { in =>
+        val s1 = in.toDF("eu", "event_id")
+          .select(timestamp_micros(col("eu")).as("ts"),
+            pmod(col("event_id"), lit(4)).as("auction"))
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "3600 seconds").as("w0"), col("auction"))
+          .agg(count(lit(1)).as("cnt"))
+        s1.groupBy(window(col("w0"), "3600 seconds"))
+          .agg(max(col("cnt")).as("mx"),
+            collect_list(struct(col("cnt"), col("auction"))).as("items"))
+          .select(col("window.start").cast("long").as("ws"), col("mx"),
+            explode(col("items")).as("it"))
+          .where(col("it.cnt") === col("mx"))
+          .select(col("ws"), col("it.auction").as("auction"), col("it.cnt").as("cnt"))
+      }
     },
     Some(s"""WITH e AS (SELECT ${es("ts")} AS es, epoch_us(ts::TIMESTAMP) AS eu,
       |        event_id % 4 AS auction FROM events),
@@ -1419,32 +1270,17 @@ object ReferenceQueries {
     */
   val qStreamAsOf = Fixture(
     "q_stream_asof_join",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
       val rows = Tables.events(s, d)
         .where(col("event_type").isin("click", "purchase"))
         .select(col("user_id"), unix_micros(col("ts")).as("eu"), col("event_id"),
           when(col("event_type") === "click", 0).otherwise(1).as("side"))
         .as[(Long, Long, Long, Int)].collect().sortBy(r => (r._2, r._4, r._3))
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Long, Int)]
-      val stream = ms.toDF().toDF("user_id", "eu", "event_id", "side")
-      val out = graft.streaming.StreamingAsOf.latestPrior(s, stream).toDF()
-      val sink = s"stream_asof_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 4 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, Replay.chunked(rows, 4)) { in =>
+        graft.streaming.StreamingAsOf
+          .latestPrior(s, in.toDF("user_id", "eu", "event_id", "side")).toDF()
+      }
     },
     Some("""WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts::TIMESTAMP) AS eu FROM events),
       | l AS (SELECT event_id AS l_id, user_id, eu AS l_eu FROM e WHERE event_type = 'click'),
@@ -1486,7 +1322,7 @@ object ReferenceQueries {
     */
   val qStreamKmvDistinct = Fixture(
     "q_stream_kmv_distinct",
-    (s, d) => replayEvents(s, d, "stream_kmv") { stream =>
+    (s, d) => eventsReplay(s, d) { stream =>
       import graft.functions.{Kmv, TextFunctions}
       stream.withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "3600 seconds"))
@@ -1525,16 +1361,16 @@ object ReferenceQueries {
     */
   val qStreamKmvDistinctFiles = Fixture(
     "q_stream_kmv_distinct_files",
-    (s, d) => {
+    (spark, d) => Replay(spark, partitions = 16, rocksDb = true) { s =>
       import graft.functions.{Kmv, TextFunctions}
       val ev = Tables.eventsWithEpoch(s, d)
         .select((col("es") * lit(10000000L) + col("event_id")).as("ord"),
           col("es"), col("user_id").cast("long").as("user_id"))
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_replay_kmv_${Integer.toHexString(d.hashCode)}").getAbsolutePath
-      graft.streaming.FileReplay.stageOrdered(ev, dir, "ord", 32,
+      FileReplay.stageOrdered(ev, dir, "ord", 32,
         tail = Some(ev.orderBy(col("ord").desc).limit(1)))
-      val out = s.readStream
+      Replay.drain(s.readStream
         .schema("ord LONG, es LONG, user_id LONG")
         .option("maxFilesPerTrigger", "16")
         .parquet(dir)
@@ -1547,17 +1383,7 @@ object ReferenceQueries {
         .select(unix_timestamp(col("window.start")).as("ws"),
           size(col("kmv")).cast("long").as("sketch_size"),
           Quant.q4(Kmv.estimate(col("kmv"), 16)).as("est_users"),
-          col("cnt"))
-      val sink = s"stream_kmv_files_${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "16")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+          col("cnt")))
     },
     qStreamKmvDistinct.oracle)
 

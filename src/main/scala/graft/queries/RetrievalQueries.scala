@@ -8,6 +8,7 @@ import graft.functions.{Privacy, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.operators.{Funnel, Quant}
 import graft.similarity.Ann
+import graft.streaming.{FileReplay, Replay}
 import OracleSql._
 import CorpusQueries.qDedupIndexProbe
 
@@ -186,8 +187,7 @@ object RetrievalQueries {
     */
   val qStreamAhashIngest = Fixture(
     "q_stream_ahash_index_ingest",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
@@ -201,17 +201,14 @@ object RetrievalQueries {
       val rows = feats.where(col("doc_id") % 4 === 2)
         .select(col("doc_id").cast("long"), col("ahash").cast("long"))
         .as[(Long, Long)].collect().sortBy(_._1)
-      val chunks = rows.grouped(rows.length / 2 + 1).toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long)]
-      val q = graft.streaming.StreamingIndexIngest.startAhash(
-        ms.toDF().toDF("doc_id", "ahash"), "doc_id", "ahash", 3, tbl,
-        s"$dir/cp")
-      try chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
-      finally q.stop()
+      val chunks = Replay.chunked(rows, 2)
+      Replay.chunksInto(s, chunks) { in =>
+        graft.streaming.StreamingIndexIngest.startAhash(
+          in.toDF("doc_id", "ahash"), "doc_id", "ahash", 3, tbl, s"$dir/cp")
+      }
       // crash-replay of the last micro-batch: partition overwrite, not append
       graft.streaming.StreamingIndexIngest.applyAhashBatch(
-        chunks.last.toSeq.toDF("doc_id", "ahash"), "doc_id", "ahash", 3, tbl,
+        chunks.last.toDF("doc_id", "ahash"), "doc_id", "ahash", 3, tbl,
         chunks.length - 1L)
       Multimodal.ahashProbeIndex(s, feats.where(col("doc_id") % 2 === 1),
         "doc_id", "ahash", 3, tbl)
@@ -672,8 +669,7 @@ object RetrievalQueries {
     */
   val qStreamAnnProbe = Fixture(
     "q_stream_ann_probe",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark, rocksDb = true) { s =>
       import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val emb = Tables.embeddings(s, d)
@@ -687,30 +683,16 @@ object RetrievalQueries {
       val rows = emb.where(col("vec_id") < 30)
         .select(col("vec_id").cast("long"), col("embedding"))
         .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      val qdf = ms.toDF().toDF("query_id", "qv")
-        .withColumn("ts", timestamp_seconds(col("query_id") * 7))
-      val out = Ann.ivfSearchStreamCandidates(s, tbl, cents, qdf, 2)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "60 seconds"), col("query_id"))
-        .agg(max(struct(col("cos"), (-col("neighbor_id")).as("nn"))).as("b"))
-        .select(unix_timestamp(col("window.start")).as("ws"), col("query_id"),
-          (-col("b.nn")).as("neighbor_id"), col("b.cos").as("cos"))
-      val sink = s"stream_ann_$h${System.nanoTime}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.withRocksDb(s) {
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sink).start()
-        try
-          rows.grouped(math.max(1, rows.length / 2 + 1)).foreach { chunk =>
-            ms.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(sink)
+      Replay.chunks(s, Replay.chunked(rows, 2)) { in =>
+        val qdf = in.toDF("query_id", "qv")
+          .withColumn("ts", timestamp_seconds(col("query_id") * 7))
+        Ann.ivfSearchStreamCandidates(s, tbl, cents, qdf, 2)
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "60 seconds"), col("query_id"))
+          .agg(max(struct(col("cos"), (-col("neighbor_id")).as("nn"))).as("b"))
+          .select(unix_timestamp(col("window.start")).as("ws"), col("query_id"),
+            (-col("b.nn")).as("neighbor_id"), col("b.cos").as("cos"))
+      }
     },
     Some(s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
       |        FROM embeddings),
@@ -1069,8 +1051,7 @@ object RetrievalQueries {
     */
   val qStreamBm25Ingest = Fixture(
     "q_stream_bm25_ingest",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
@@ -1082,15 +1063,13 @@ object RetrievalQueries {
       val rows = docs.where(col("doc_id") % 2 === 1)
         .select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)].collect().sortBy(_._1)
-      val chunks = rows.grouped(rows.length / 2 + 1).toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingIndexIngest.startBm25(
-        ms.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl, s"$dir/cp")
-      try chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
-      finally q.stop()
+      val chunks = Replay.chunked(rows, 2)
+      Replay.chunksInto(s, chunks) { in =>
+        graft.streaming.StreamingIndexIngest.startBm25(
+          in.toDF("doc_id", "text"), "doc_id", "text", tbl, s"$dir/cp")
+      }
       graft.streaming.StreamingIndexIngest.applyBm25Batch(
-        chunks.last.toSeq.toDF("doc_id", "text"), "doc_id", "text", tbl,
+        chunks.last.toDF("doc_id", "text"), "doc_id", "text", tbl,
         chunks.length - 1L)
       graft.similarity.Bm25.searchTopK(s, tbl, Seq("table", "row", "window"), 20)
     },
@@ -1114,8 +1093,7 @@ object RetrievalQueries {
     */
   val qStreamMinhashIngest = Fixture(
     "q_stream_minhash_index_ingest",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
@@ -1127,17 +1105,15 @@ object RetrievalQueries {
       val rows = docs.where(col("doc_id") % 4 === 2)
         .select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)].collect().sortBy(_._1)
-      val chunks = rows.grouped(rows.length / 2 + 1).toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingIndexIngest.startMinhash(
-        ms.toDF().toDF("doc_id", "text"), "doc_id", "text", 3, tbl, s"$dir/cp")
-      try chunks.foreach { c => ms.addData(c.toSeq); q.processAllAvailable() }
-      finally q.stop()
+      val chunks = Replay.chunked(rows, 2)
+      Replay.chunksInto(s, chunks) { in =>
+        graft.streaming.StreamingIndexIngest.startMinhash(
+          in.toDF("doc_id", "text"), "doc_id", "text", 3, tbl, s"$dir/cp")
+      }
       // crash-replay of the last micro-batch: same batchId, same rows —
       // both partition overwrites must leave the index bit-identical
       graft.streaming.StreamingIndexIngest.applyMinhashBatch(
-        chunks.last.toSeq.toDF("doc_id", "text"), "doc_id", "text", 3, tbl,
+        chunks.last.toDF("doc_id", "text"), "doc_id", "text", 3, tbl,
         chunks.length - 1L)
       Dedup.minhashProbeIndex(s, docs.where(col("doc_id") % 2 === 1),
         "doc_id", "text", 3, 0.8, tbl)
@@ -1166,9 +1142,7 @@ object RetrievalQueries {
     */
   val qStreamPipelineComposite = Fixture(
     "q_stream_pipeline_composite",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
+    (spark, d) => Replay(spark) { s =>
       import graft.streaming.StreamingIndexIngest
       val h = Integer.toHexString(d.hashCode)
       val run = java.lang.Long.toHexString(System.nanoTime)
@@ -1186,12 +1160,12 @@ object RetrievalQueries {
       Dedup.minhashWriteIndexIngestable(
         seed, "doc_id", "text", 3, mhTbl, s"$dir/mh", 8)
       // the live source: the %4==2 quarter, event-time ordered, replayed
-      // from a STAGED FILE SET (graft.streaming.FileReplay) — one file
+      // from a STAGED FILE SET ([[FileReplay]]) — one file
       // per trigger, so each micro-batch gets real scan splits and the
       // bench measures the pipeline, not a driver-side addData feed; the
       // staged dir is content-keyed and reused across bench attempts
       val replayDir = s"${sys.props("java.io.tmpdir")}/graft_replay_pipe_$h"
-      graft.streaming.FileReplay.stageOrdered(
+      FileReplay.stageOrdered(
         docs.where(col("doc_id") % 4 === 2)
           .select(col("doc_id").cast("long").as("doc_id"), col("text")),
         replayDir, "doc_id", 2)
@@ -1204,33 +1178,27 @@ object RetrievalQueries {
           stream, "text", "ts", "1 hour")
         .where(quality)
         .select("doc_id", "text")
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = curated.writeStream
-          .option("checkpointLocation", s"$dir/cp")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // ONE batch, TWO families: both appends key their partition
-            // overwrites on the same batchId
-            val b = batch.persist()
-            try {
-              StreamingIndexIngest.applyBm25Batch(b, "doc_id", "text",
-                bmTbl, batchId)
-              StreamingIndexIngest.applyMinhashBatch(b, "doc_id", "text",
-                3, mhTbl, batchId)
-            } finally { b.unpersist(); () }
-          }
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      Replay.drainInto(curated.writeStream
+        .option("checkpointLocation", s"$dir/cp")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // ONE batch, TWO families: both appends key their partition
+          // overwrites on the same batchId
+          val b = batch.persist()
+          try {
+            StreamingIndexIngest.applyBm25Batch(b, "doc_id", "text",
+              bmTbl, batchId)
+            StreamingIndexIngest.applyMinhashBatch(b, "doc_id", "text",
+              3, mhTbl, batchId)
+          } finally { b.unpersist(); () }
+        }
+        .start())
       // crash-replay of the LAST batch into BOTH families: the last
       // staged file IS the last micro-batch (one file per trigger), its
       // post-pipeline rows re-derived (dedup is passthrough on this
       // corpus, the gate is deterministic), same batchId — every table
       // must come out bit-identical
       val replay = s.read.parquet(
-          graft.streaming.FileReplay.stagedFiles(replayDir).last)
+          FileReplay.stagedFiles(replayDir).last)
         .where(quality)
       StreamingIndexIngest.applyBm25Batch(replay, "doc_id", "text", bmTbl, 1L)
       StreamingIndexIngest.applyMinhashBatch(replay, "doc_id", "text", 3,
@@ -1397,8 +1365,7 @@ object RetrievalQueries {
     */
   lazy val qStreamDecontaminate = Fixture(
     "q_stream_decontaminate",
-    (s, d) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    (spark, d) => Replay(spark) { s =>
       import s.implicits._
       val all = Tables.documents(s, d)
       val evalSet: Array[Long] = all.where(col("doc_id") < 25)
@@ -1408,8 +1375,6 @@ object RetrievalQueries {
       val rows = all.where(col("doc_id") >= 25)
         .select(col("doc_id"), col("text"))
         .as[(Long, String)].collect().sortBy(_._1)
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
       // membership probe = ONE codegen'd sorted-merge per row
       // (SortedIntersectSize against the sorted eval literal), not a
       // per-shingle linear array_contains over the |eval| literal — the
@@ -1419,30 +1384,24 @@ object RetrievalQueries {
       // the shingle transform runs once per row (winnow's staging rule).
       import org.apache.spark.sql.GraftColumnBridge
       val litSet = lit(evalSet) // ascending — the merge contract
-      val out = ms.toDF().toDF("doc_id", "text")
-        .withColumn("sh", TextFunctions.shingles(col("text"), 3))
-        .where(size(col("sh")) > 0)
-        .withColumn("shh", sort_array(transform(col("sh"), x => xxhash64(x))))
-        .withColumn("n_overlap", GraftColumnBridge.column(
-          graft.functions.SortedIntersectSize(
-            GraftColumnBridge.expression(col("shh")),
-            GraftColumnBridge.expression(litSet), 0.0)).cast("long"))
-        .where(col("n_overlap") > 0)
-        .select(col("doc_id"), col("n_overlap"),
-          Quant.q4(col("n_overlap") / size(col("sh"))).as("frac"))
-      val sink = s"stream_decon_${System.nanoTime}"
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try {
-        // ONE trigger (the probe is STATELESS — no state store, no
-        // watermark — so batch boundaries cannot affect any row), but MANY
-        // addData blocks: MemoryStream makes one partition per block, and
-        // the shingle+hash+merge projection is the cost — one 5 000-row
-        // block would run it on a single core while 31 idle
-        rows.grouped(math.max(1, rows.length / 64 + 1)).foreach(c => ms.addData(c.toSeq))
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table(sink)
+      // ONE trigger (the probe is STATELESS — no state store, no
+      // watermark — so batch boundaries cannot affect any row), split 64
+      // ways: a MemoryStream micro-batch is otherwise one partition, and
+      // the shingle+hash+merge projection is the cost — one 5 000-row
+      // partition would run it on a single core while 31 idle
+      Replay.chunks(s, Seq(rows.toSeq), numPartitions = Some(64)) { in =>
+        in.toDF("doc_id", "text")
+          .withColumn("sh", TextFunctions.shingles(col("text"), 3))
+          .where(size(col("sh")) > 0)
+          .withColumn("shh", sort_array(transform(col("sh"), x => xxhash64(x))))
+          .withColumn("n_overlap", GraftColumnBridge.column(
+            graft.functions.SortedIntersectSize(
+              GraftColumnBridge.expression(col("shh")),
+              GraftColumnBridge.expression(litSet), 0.0)).cast("long"))
+          .where(col("n_overlap") > 0)
+          .select(col("doc_id"), col("n_overlap"),
+            Quant.q4(col("n_overlap") / size(col("sh"))).as("frac"))
+      }
     },
     qDecontaminate.oracle)
 

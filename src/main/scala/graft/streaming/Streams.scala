@@ -145,45 +145,4 @@ object Streams {
         col(rightTsCol) <= col(leftTsCol) + expr(s"INTERVAL $windowSec SECONDS"),
       "inner")
   }
-
-  /** `transformWithState` (state-v2) runs only on the RocksDB state store
-    * provider; wraps `body` — which must start AND fully drain its streaming
-    * query — with the provider set on the session, restoring the previous
-    * value after (the provider is captured per query at start).
-    */
-  def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // changelog checkpointing: commit the per-batch delta instead of a full
-    // RocksDB snapshot upload — snapshots still happen, but off the commit
-    // path (background maintenance), which is the production posture too
-    val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(clKey, "true")
-    try body
-    finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      prevCl.fold(spark.conf.unset(clKey))(spark.conf.set(clKey, _))
-    }
-  }
-
-  /** Drains a streaming DataFrame into an in-memory table and returns it —
-    * the test/bench harness for streaming runs (driver data is finite).
-    */
-  def runToTable(
-      spark: SparkSession,
-      stream: DataFrame,
-      name: String,
-      outputMode: String): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(outputMode)
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
-  }
 }

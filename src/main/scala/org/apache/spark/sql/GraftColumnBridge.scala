@@ -19,4 +19,12 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A child of `spark` that starts from a copy of its conf, temp views and
+    * functions and shares its SparkContext and catalog; later conf changes
+    * on either side stay on that side ([[graft.streaming.Replay]]'s scoped
+    * overrides). `newSession()` would start from the defaults instead.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 }

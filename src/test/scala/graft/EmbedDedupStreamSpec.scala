@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.{StreamingEmbedDedup, Streams}
+import graft.streaming.{Replay, StreamingEmbedDedup}
 
 /** Streaming embedding near-dup: the documented seen-not-kept drop rule
   * (chain case pinned), cell isolation, the state cap's degrade-don't-grow
@@ -10,23 +10,13 @@ import graft.streaming.{StreamingEmbedDedup, Streams}
 class EmbedDedupStreamSpec extends SparkTestBase {
 
   private def replay(chunks: Seq[Seq[(Long, Long, Array[Float])]],
-      minCos: Double, cap: Int = Int.MaxValue): Set[Long] = {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Array[Float])]
-    val out = StreamingEmbedDedup.firstSeen(
-      ms.toDF().toDF("cell", "vec_id", "vec"), minCos, cap)
-    val sink = s"embed_dedup_spec_${System.nanoTime}"
-    Streams.withRocksDb(s) {
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      finally q.stop()
+      minCos: Double, cap: Int = Int.MaxValue): Set[Long] =
+    Replay(spark, rocksDb = true) { s =>
+      import s.implicits._
+      Replay.chunks(s, chunks) { in =>
+        StreamingEmbedDedup.firstSeen(in.toDF("cell", "vec_id", "vec"), minCos, cap)
+      }.select("vec_id").collect().map(_.getLong(0)).toSet
     }
-    s.table(sink).select("vec_id").collect().map(_.getLong(0)).toSet
-  }
 
   private def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
 

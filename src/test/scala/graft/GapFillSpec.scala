@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{AggFn, AggSpec, GapFill, Quant, TimeWindows}
-import graft.streaming.{Streams, StreamingGapFill}
+import graft.streaming.{Replay, Streams, StreamingGapFill}
 
 class GapFillSpec extends SparkTestBase {
 
@@ -60,12 +60,12 @@ class GapFillSpec extends SparkTestBase {
     assert(bubbles.nonEmpty,
       "fixture degenerate: every key is active up to the watermark")
 
-    val stream = Streams.events(spark, sfDir).where(col("user_id") % 199 === 0)
-    val out = StreamingGapFill.tumblingWithBubbles(spark, stream, sizeSec).toDF()
-      .withColumn("sum_v", Quant.q4(col("sum_v"))) // null stays null on bubbles
-      .select("ws", "event_type", "cnt", "sum_v")
-    Streams.withRocksDb(spark) {
-      val q = out.writeStream.outputMode("append")
+    val got = Replay(spark, rocksDb = true) { s =>
+      val stream = Streams.events(s, sfDir).where(col("user_id") % 199 === 0)
+      val q = StreamingGapFill.tumblingWithBubbles(s, stream, sizeSec).toDF()
+        .withColumn("sum_v", Quant.q4(col("sum_v"))) // null stays null on bubbles
+        .select("ws", "event_type", "cnt", "sum_v")
+        .writeStream.outputMode("append")
         .format("memory").queryName("s_gapfill").start()
       try {
         q.processAllAvailable()
@@ -74,23 +74,24 @@ class GapFillSpec extends SparkTestBase {
         val want = expected.count()
         val deadline = System.currentTimeMillis() + 30000
         while (System.currentTimeMillis() < deadline &&
-          spark.table("s_gapfill").count() < want) Thread.sleep(200)
+          s.table("s_gapfill").count() < want) Thread.sleep(200)
       } finally q.stop()
+      s.table("s_gapfill")
     }
-    val got = spark.table("s_gapfill")
     assertSameRows(got, expected)
     assert(got.where(col("cnt") === 0).count() > 0, "no bubble windows exercised")
   }
 
   test("lateness bound > 0: out-of-order rows within the bound are counted; windows close on watermark only") {
     import graft.sources.Sources
-    val (ms, df) = Sources.replay(spark)
-    val stream = df.select(col("event_type"), col("es"), col("value"), col("ts"))
-    val out = StreamingGapFill
-      .tumblingWithBubbles(spark, stream, 600L, watermarkDelaySec = 600L).toDF()
-      .select("event_type", "ws", "cnt", "sum_v")
-    Streams.withRocksDb(spark) {
-      val q = out.writeStream.outputMode("append")
+    import spark.implicits._
+    val got = Replay(spark, rocksDb = true) { s =>
+      val (ms, df) = Sources.replay(s)
+      val stream = df.select(col("event_type"), col("es"), col("value"), col("ts"))
+      val q = StreamingGapFill
+        .tumblingWithBubbles(s, stream, 600L, watermarkDelaySec = 600L).toDF()
+        .select("event_type", "ws", "cnt", "sum_v")
+        .writeStream.outputMode("append")
         .format("memory").queryName("s_gapfill_ooo").start()
       try {
         // batch 1: windows 0 and 1 both open; the in-order fast path would
@@ -109,12 +110,11 @@ class GapFillSpec extends SparkTestBase {
         // timer closes land in a no-data micro-batch; poll for them
         val deadline = System.currentTimeMillis() + 30000
         while (System.currentTimeMillis() < deadline &&
-          spark.table("s_gapfill_ooo").count() < 4) Thread.sleep(200)
+          s.table("s_gapfill_ooo").count() < 4) Thread.sleep(200)
       } finally q.stop()
+      s.table("s_gapfill_ooo")
+        .as[(String, Long, Long, Option[Double])].collect().toSet
     }
-    import spark.implicits._
-    val got = spark.table("s_gapfill_ooo")
-      .as[(String, Long, Long, Option[Double])].collect().toSet
     assert(got == Set(
       ("a", 0L, 2L, Some(3.0)),    // es 100 + the out-of-order es 550
       ("a", 600L, 1L, Some(4.0)),
@@ -142,14 +142,14 @@ class GapFillSpec extends SparkTestBase {
     } yield Sources.EventRow(es, es + off, 1, key, (es % 13).toDouble)
     val rows = inOrder.sortBy(r => r.es + (r.es * 7919) % 300)
 
-    val (ms, df) = Sources.replay(spark)
+    Replay(spark, rocksDb = true) { s =>
+    val (ms, df) = Sources.replay(s)
     val stream = df.select(col("event_type"), col("es"), col("value"), col("ts"))
-    val out = StreamingGapFill
-      .tumblingWithBubbles(spark, stream, sizeSec, watermarkDelaySec = delaySec).toDF()
+    val q = StreamingGapFill
+      .tumblingWithBubbles(s, stream, sizeSec, watermarkDelaySec = delaySec).toDF()
       .withColumn("sum_v", Quant.q4(col("sum_v")))
       .select("event_type", "ws", "cnt", "sum_v")
-    Streams.withRocksDb(spark) {
-    val q = out.writeStream.outputMode("append")
+      .writeStream.outputMode("append")
       .format("memory").queryName("s_gapfill_prop").start()
     try {
       rows.grouped(16).foreach { batch => ms.addData(batch: _*); q.processAllAvailable() }
@@ -166,8 +166,8 @@ class GapFillSpec extends SparkTestBase {
       val want = expected.count()
       val deadline = System.currentTimeMillis() + 30000
       while (System.currentTimeMillis() < deadline &&
-        spark.table("s_gapfill_prop").count() < want) Thread.sleep(200)
-      val got = spark.table("s_gapfill_prop")
+        s.table("s_gapfill_prop").count() < want) Thread.sleep(200)
+      val got = s.table("s_gapfill_prop")
       assertSameRows(got, expected)
       assert(got.where(col("cnt") === 0).count() > 0, "no bubbles exercised")
     } finally q.stop()

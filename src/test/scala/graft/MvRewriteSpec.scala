@@ -225,53 +225,6 @@ class MvRewriteSpec extends SparkTestBase {
     }
   }
 
-  test("PaneRewrite + MvRewrite coexist: each aggregate picks exactly one rewrite") {
-    import graft.plans.PaneRewrite
-    val parent = freshDir("mv_coex")
-    val baseDir = s"$parent/base"
-    (1 to 600).map(i => (s"g${i % 3}", i.toLong,
-        new java.sql.Timestamp(1700000000000L + i * 10000L)))
-      .toDF("g1", "v", "ts").write.parquet(baseDir)
-    val base = spark.read.parquet(baseDir)
-    val mvDir = s"$parent/mv"
-    base.groupBy("g1").agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
-      .write.parquet(mvDir)
-    MvRegistry.register(spark, "mv_coex", baseDir, Seq("g1"),
-      Seq(AggDef("cnt", "count", None), AggDef("sum_v", "sum", Some("v"))), mvDir)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev ++ Seq(PaneRewrite(2), MvRewrite())
-    try {
-      // sliding-window aggregate over the MV-registered base: the PANE
-      // rewrite fires (window grouping key is not a plain column, so the
-      // MV matcher must not claim it) and the MV scan stays out of the plan
-      val slide = base
-        .groupBy(window(col("ts"), "120 seconds", "60 seconds"), col("g1"))
-        .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_v"))
-        .select(col("window.start").cast("long").as("ws"), col("g1"),
-          col("cnt"), col("sum_v"))
-      val slideTree = slide.queryExecution.optimizedPlan.treeString
-      assert(slideTree.contains("__pane"), "pane rewrite did not fire")
-      assert(!scanPaths(slide).exists(_.contains(mvDir)),
-        "MV must not claim a window-grouped aggregate")
-      // plain rollup over the same base: the MV rewrite fires and the pane
-      // machinery leaves it alone
-      val roll = base.groupBy("g1").agg(sum(col("v")).as("s"))
-      val rollTree = roll.queryExecution.optimizedPlan.treeString
-      assert(scanPaths(roll).exists(_.contains(mvDir)), "MV rewrite did not fire")
-      assert(!rollTree.contains("__pane"), "pane rewrite fired on a plain rollup")
-      // both return correct values with BOTH rules live
-      val expect = (1 to 600).groupBy(i => s"g${i % 3}")
-        .map { case (g, is) => g -> is.map(_.toLong).sum }
-      roll.collect().foreach(r => assert(r.getLong(1) == expect(r.getString(0))))
-      val slideRows = slide.collect()
-      assert(slideRows.map(_.getLong(2)).sum ==
-        2L * 600, "each row must land in exactly 2 sliding windows")
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      MvRegistry.deregister("mv_coex")
-    }
-  }
-
   test("v3: star-join rollup serves from the MV; near-misses fall through") {
     val parent = freshDir("mv_join")
     val factDir = s"$parent/fact"

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Pattern
 import graft.operators.Pattern.Step
+import graft.streaming.Replay
 
 /** Sequential pattern matching (operators/Pattern.scala) — the
   * MATCH_RECOGNIZE-class funnel generalization: arbitrary per-step
@@ -296,7 +297,6 @@ class PatternSpec extends SparkTestBase {
   }
 
   test("streaming twin agrees with the batch fold per window") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // two day-windows; key 1 matches in w0, is guard-killed in w1;
     // key 2 anchors in w0 only
     val rows = Seq(
@@ -307,21 +307,14 @@ class PatternSpec extends SparkTestBase {
       // window-2 event whose watermark closes w0 and w1
       (9L, 2 * 86400L + 10L, "a", 0.0)
     ).sortBy(_._2)
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String, Double)]
-    val stream = ms.toDF().toDF("k", "es", "ty", "v")
-      .withColumn("ts", timestamp_micros(col("es") * 1000000L))
-    val sink = s"pattern_spec_${System.nanoTime}"
-    val q = graft.streaming.StreamingPattern.keyMatch(stream, "ts", "k",
-        steps, 86400L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName(sink).start()
-    try {
-      ms.addData(rows); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table(sink)
-      .select("ws", "k", "depth", "matched")
-      .as[(Long, Long, Int, Boolean)].collect().toSet
+    val got = Replay(spark) { s =>
+      Replay.chunks(s, Seq(rows)) { in =>
+        graft.streaming.StreamingPattern.keyMatch(in.toDF("k", "es", "ty", "v")
+            .withColumn("ts", timestamp_micros(col("es") * 1000000L)),
+          "ts", "k", steps, 86400L)
+      }.select("ws", "k", "depth", "matched")
+        .as[(Long, Long, Int, Boolean)].collect().toSet
+    }
     assert(got == Set((0L, 1L, 2, true), (0L, 2L, 1, false),
       (86400L, 1L, 1, false)), s"$got")
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamingAsOf
+import graft.streaming.{Replay, StreamingAsOf}
 
 /** Pins StreamingAsOf's contract: micro-batch chunking is not load-bearing
   * (1-chunk and 8-chunk replays emit the identical pairing set), state
@@ -10,29 +10,8 @@ import graft.streaming.StreamingAsOf
   */
 class StreamingAsOfSpec extends SparkTestBase {
 
-  private def replay(rows: Seq[(Long, Long, Long, Int)], chunks: Int) = {
-    val s = spark
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Long, Int)]
-    val stream = ms.toDF().toDF("user_id", "eu", "event_id", "side")
-    val out = StreamingAsOf.latestPrior(s, stream).toDF()
-    val sink = s"asof_spec_${System.nanoTime}"
-    graft.streaming.Streams.withRocksDb(s) {
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try
-        rows.grouped(math.max(1, rows.length / chunks + 1)).foreach { c =>
-          ms.addData(c)
-          q.processAllAvailable()
-        }
-      finally q.stop()
-    }
-    s.table(sink).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSet
-  }
+  private def replay(rows: Seq[(Long, Long, Long, Int)], chunks: Int) =
+    replayBatches(Replay.chunked(rows, chunks))
 
   // user 1: click(10) → purchase(20) → click(30) → purchase(40), plus a
   // tie at eu=50 (click and purchase same instant → must pair) and a
@@ -58,25 +37,15 @@ class StreamingAsOfSpec extends SparkTestBase {
     * straggler pinned to a later micro-batch, which chunk-count splitting
     * can't express.
     */
-  private def replayBatches(batches: Seq[Seq[(Long, Long, Long, Int)]]) = {
-    val s = spark
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Long, Int)]
-    val stream = ms.toDF().toDF("user_id", "eu", "event_id", "side")
-    val out = StreamingAsOf.latestPrior(s, stream).toDF()
-    val sink = s"asof_ooo_${System.nanoTime}"
-    graft.streaming.Streams.withRocksDb(s) {
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      finally q.stop()
+  private def replayBatches(batches: Seq[Seq[(Long, Long, Long, Int)]]) =
+    Replay(spark, rocksDb = true) { s =>
+      import s.implicits._
+      Replay.chunks(s, batches) { in =>
+        StreamingAsOf.latestPrior(s, in.toDF("user_id", "eu", "event_id", "side")).toDF()
+      }.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toSet
     }
-    s.table(sink).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSet
-  }
 
   test("a straggler left older than the stored state cannot regress the pairing") {
     // click@30 lands in batch 1; the late click@10 straggles into batch 2

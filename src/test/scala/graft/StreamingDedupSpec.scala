@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamingDedup
+import graft.streaming.{Replay, StreamingDedup}
 
 /** Streaming exact dedup: only the first copy per normalized content passes,
   * across micro-batches, with fingerprint state keyed and watermark-evicted.
@@ -36,27 +36,15 @@ class StreamingDedupSpec extends SparkTestBase {
   // ---- near-dup (MinHash/LSH) ---------------------------------------------
 
   private def replayMinhash(
-      rows: Seq[(Long, String)], chunks: Int, minJ: Double = 0.8): Set[Long] = {
-    val s = spark
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val kept = graft.streaming.StreamingMinhashDedup
-      .firstSeen(s, ms.toDF().toDF("doc_id", "text"), "doc_id", "text", 3, minJ)
-      .toDF("doc_id")
-    val sink = s"mh_dedup_${System.nanoTime}"
-    graft.streaming.Streams.withRocksDb(s) {
-      val q = kept.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try
-        rows.grouped(math.max(1, rows.length / chunks + 1)).foreach { c =>
-          ms.addData(c); q.processAllAvailable()
-        }
-      finally q.stop()
+      rows: Seq[(Long, String)], chunks: Int, minJ: Double = 0.8): Set[Long] =
+    Replay(spark, rocksDb = true) { s =>
+      import s.implicits._
+      Replay.chunks(s, Replay.chunked(rows, chunks)) { in =>
+        graft.streaming.StreamingMinhashDedup
+          .firstSeen(s, in.toDF("doc_id", "text"), "doc_id", "text", 3, minJ)
+          .toDF("doc_id")
+      }.collect().map(_.getLong(0)).toSet
     }
-    s.table(sink).collect().map(_.getLong(0)).toSet
-  }
 
   // near-identical texts (one word swapped in a 12-word doc → Jaccard of
   // 3-shingles ≈ 0.54 — below τ=0.8; use a one-word SUFFIX change → shared

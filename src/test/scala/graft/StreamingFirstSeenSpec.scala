@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.streaming.{StreamingFirstSeen, Streams}
+import graft.streaming.{Replay, StreamingFirstSeen}
 
 /** StreamingFirstSeen: first-seen set equals the batch min-doc_id keeper
   * rule regardless of micro-batch cut positions, including duplicates
@@ -15,26 +14,15 @@ class StreamingFirstSeenSpec extends SparkTestBase {
   /** Replay (doc_id, text, source) tuples through firstSeen in the given
     * chunks; returns the kept doc_ids.
     */
-  private def replay(chunks: Seq[Seq[(Long, String, String)]]): Set[Long] = {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, String)]
-    val stream = ms.toDF().toDF("doc_id", "text", "source")
-      .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
-      .withWatermark("ts", "0 seconds")
-    val out: DataFrame = StreamingFirstSeen.firstSeen(stream, "text", "ts")
-    val sink = s"first_seen_spec_${System.nanoTime}"
-    Streams.withRocksDb(s) {
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try {
-        chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      } finally q.stop()
+  private def replay(chunks: Seq[Seq[(Long, String, String)]]): Set[Long] =
+    Replay(spark, rocksDb = true) { s =>
+      import s.implicits._
+      Replay.chunks(s, chunks) { in =>
+        StreamingFirstSeen.firstSeen(in.toDF("doc_id", "text", "source")
+          .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))
+          .withWatermark("ts", "0 seconds"), "text", "ts")
+      }.select("doc_id").collect().map(_.getLong(0)).toSet
     }
-    s.table(sink).select("doc_id").collect().map(_.getLong(0)).toSet
-  }
 
   test("duplicates across distant micro-batches are dropped; min doc_id kept") {
     val kept = replay(Seq(

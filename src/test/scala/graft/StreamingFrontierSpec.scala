@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{StreamingFrontier, Streams}
+import graft.streaming.{Replay, StreamingFrontier}
 
 /** StreamingFrontier politeness contract on hand-sized replays (the
   * q_stream_frontier oracle proves the corpus path): per-domain rounds
@@ -14,26 +15,17 @@ class StreamingFrontierSpec extends SparkTestBase {
   /** Replay (id, domain) tuples in the given chunks; returns
     * (id -> (domain, fetch_round)).
     */
-  private def replay(chunks: Seq[Seq[(Long, String)]]): Map[Long, (String, Long)] = {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val stream = ms.toDF().toDF("id", "domain")
-      .withColumn("ts", timestamp_micros((col("id") + 1L) * 1000000L))
-      .withWatermark("ts", "0 seconds")
-    val out = StreamingFrontier.schedule(stream, "id", "domain", "ts")
-    val sink = s"frontier_spec_${System.nanoTime}"
-    Streams.withRocksDb(s) {
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      finally q.stop()
+  private def schedule(in: DataFrame): DataFrame =
+    StreamingFrontier.schedule(in.toDF("id", "domain")
+        .withColumn("ts", timestamp_micros((col("id") + 1L) * 1000000L))
+        .withWatermark("ts", "0 seconds"), "id", "domain", "ts")
+
+  private def replay(chunks: Seq[Seq[(Long, String)]]): Map[Long, (String, Long)] =
+    Replay(spark, rocksDb = true) { s =>
+      import s.implicits._
+      Replay.chunks(s, chunks)(schedule).collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     }
-    s.table(sink).collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
-  }
 
   test("rounds continue across micro-batches, per domain independently") {
     val r = replay(Seq(
@@ -58,30 +50,20 @@ class StreamingFrontierSpec extends SparkTestBase {
     // state must stay ONE counter row per domain — numRowsTotal is pinned
     // to the domain count, so a dominant key skews COMPUTE to one
     // partition (inherent to keyed politeness) but never state.
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val urls = (0L until 200L).map(i =>
       (i, if (i % 20 == 5) s"tail${i % 40}.org" else "giant.com"))
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val stream = ms.toDF().toDF("id", "domain")
-      .withColumn("ts", timestamp_micros((col("id") + 1L) * 1000000L))
-      .withWatermark("ts", "0 seconds")
-    val out = StreamingFrontier.schedule(stream, "id", "domain", "ts")
     val sink = s"frontier_skew_${System.nanoTime}"
-    var peakState = 0L
-    Streams.withRocksDb(s) {
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try urls.grouped(50).foreach { c =>
-        ms.addData(c); q.processAllAvailable()
-        peakState = math.max(peakState, q.recentProgress
-          .map(_.stateOperators.map(_.numRowsTotal).sum).maxOption.getOrElse(0L))
-      } finally q.stop()
+    val (got, peakState) = Replay(spark, rocksDb = true) { s =>
+      import s.implicits._
+      val q = Replay.chunksInto(s, urls.grouped(50).toSeq) { in =>
+        schedule(in).writeStream.outputMode("append")
+          .format("memory").queryName(sink).start()
+      }
+      (s.table(sink).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))),
+       q.recentProgress.map(_.stateOperators.map(_.numRowsTotal).sum)
+        .maxOption.getOrElse(0L))
     }
-    val got = s.table(sink).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     val dominant = got.filter(_._2 == "giant.com").sortBy(_._1)
     assert(dominant.length == 190)
     // politeness: the dominant domain's rounds are exactly 1..190 in id order

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.streaming.Replay
 
 /** Progressive funnel emission (StreamingFunnel.userDepthLive): per-
   * trigger provisional depths with a snapshot+seq latest-wins contract,
@@ -16,7 +17,6 @@ class StreamingFunnelLiveSpec extends SparkTestBase {
   private val steps = Seq("view", "click", "buy")
 
   test("provisional depths converge; finals equal the closed-window fold; state evicts") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val w = 86400L
     // user 1 converts across THREE triggers inside one window; user 2
     // anchors only; user 3's click lands before its anchor (stays 1);
@@ -33,28 +33,24 @@ class StreamingFunnelLiveSpec extends SparkTestBase {
         (1L, w + 100L, "view"), (1L, w + 200L, "click")),
       Seq((9L, 2 * w + 10L, "view"))
     )
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val stream = ms.toDF().toDF("user_id", "es", "event_type")
-      .withColumn("ts", timestamp_micros(col("es") * 1000000L))
     val sink = s"funnel_live_${System.nanoTime}"
-    var lastStateRows = -1L
-    graft.streaming.Streams.withRocksDb(spark) {
-      val q = graft.streaming.StreamingFunnel.userDepthLive(stream, "ts",
-          "user_id", "event_type", steps, w)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-        lastStateRows = q.recentProgress.reverse
-          .find(_.stateOperators.nonEmpty)
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-      } finally q.stop()
-    }
     // native-typed keys: the long user_id comes back as a long `u`
-    val rows = spark.table(sink)
-      .select("ws", "u", "seq", "depth", "fin")
-      .as[(Long, Long, Long, Int, Boolean)].collect()
+    val (rows, lastStateRows) = Replay(spark, rocksDb = true) { s =>
+      val q = Replay.chunksInto(s, chunks) { in =>
+        graft.streaming.StreamingFunnel.userDepthLive(
+            in.toDF("user_id", "es", "event_type")
+              .withColumn("ts", timestamp_micros(col("es") * 1000000L)),
+            "ts", "user_id", "event_type", steps, w)
+          .writeStream.outputMode("append").format("memory")
+          .queryName(sink).start()
+      }
+      (s.table(sink)
+        .select("ws", "u", "seq", "depth", "fin")
+        .as[(Long, Long, Long, Int, Boolean)].collect(),
+       q.recentProgress.reverse
+        .find(_.stateOperators.nonEmpty)
+        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L))
+    }
 
     // per (ws, u): depths monotone non-decreasing in seq, fin last
     rows.groupBy(r => (r._1, r._2)).foreach { case (k, rs) =>

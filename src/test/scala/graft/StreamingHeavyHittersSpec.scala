@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.{StreamingHeavyHitters, Streams}
+import graft.streaming.{Replay, StreamingHeavyHitters}
 
 /** Streaming Misra-Gries: the eviction path's bounds (order-controlled
   * single-chunk replay — estimates are arrival-order dependent, so the spec
@@ -11,22 +10,14 @@ import graft.streaming.{StreamingHeavyHitters, Streams}
   */
 class StreamingHeavyHittersSpec extends SparkTestBase {
   import spark.implicits._
-  implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-  private def run(chunks: Seq[Seq[(String, String)]], capacity: Int) = {
-    val ms = MemoryStream[(String, String)]
-    val out = StreamingHeavyHitters.heavyHitters(
-      ms.toDF().toDF("g", "i"), "g", "i", capacity)
-    val sink = s"hh_spec_${System.nanoTime}"
-    Streams.withRocksDb(spark) {
-      val q = out.writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      finally q.stop()
+  private def run(chunks: Seq[Seq[(String, String)]], capacity: Int) =
+    Replay(spark, rocksDb = true) { s =>
+      Replay.chunks(s, chunks) { in =>
+        StreamingHeavyHitters.heavyHitters(in.toDF("g", "i"), "g", "i", capacity)
+      }.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
     }
-    spark.table(sink).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
-  }
 
   test("eviction path: decrement-all keeps the majority item within MG bounds") {
     // capacity 2, one chunk, controlled order: a,a,a,b then c -> no slot,

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamingMinhashDedup
+import graft.streaming.{Replay, StreamingMinhashDedup}
 
 /** The slim production form of StreamingMinhashDedup (doc-id-only band
   * state, doc-keyed shingle store, watermark TTL, bucket cap) versus the
@@ -18,38 +19,30 @@ class StreamingMinhashSlimSpec extends SparkTestBase {
     */
   private def replaySlimMeasured(
       rows: Seq[(Long, String, Long)], chunks: Int,
-      bucketCap: Int, horizon: String = "1 hour"): (Set[Long], Long) = {
-    val s = spark
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long)]
-    val stream = ms.toDF().toDF("doc_id", "text", "us")
-      .withColumn("ts", timestamp_micros(col("us")))
-    val kept = StreamingMinhashDedup.firstSeen(
-        s, stream, "doc_id", "text", 3, 0.8,
-        tsCol = Some("ts"), watermarkDelay = "10 seconds",
+      bucketCap: Int, horizon: String = "1 hour"): (Set[Long], Long) =
+    Replay(spark, rocksDb = true, checkCorrectness = false) { s =>
+      import s.implicits._
+      val sink = s"mh_skew_${System.nanoTime}"
+      val q = Replay.chunksInto(s, Replay.chunked(rows, chunks)) { in =>
+        slim(s, in, 0.8, "10 seconds", horizon, bucketCap)
+          .writeStream.outputMode("append")
+          .format("memory").queryName(sink).start()
+      }
+      (s.table(sink).collect().map(_.getLong(0)).toSet,
+       q.recentProgress.map(_.stateOperators.map(_.numRowsTotal).sum)
+        .maxOption.getOrElse(0L))
+    }
+
+  /** The slim form over a (doc_id, text, ts_us) stream. */
+  private def slim(s: SparkSession, in: DataFrame, minJ: Double,
+      delay: String, horizon: String, bucketCap: Int) =
+    StreamingMinhashDedup.firstSeen(
+        s, in.toDF("doc_id", "text", "us")
+          .withColumn("ts", timestamp_micros(col("us"))),
+        "doc_id", "text", 3, minJ,
+        tsCol = Some("ts"), watermarkDelay = delay,
         horizon = horizon, bucketCap = bucketCap)
       .toDF("doc_id")
-    val sink = s"mh_skew_${System.nanoTime}"
-    val prev = s.conf
-      .get("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-    s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    var peak = 0L
-    try graft.streaming.Streams.withRocksDb(s) {
-      val q = kept.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try
-        rows.grouped(math.max(1, rows.length / chunks + 1)).foreach { c =>
-          ms.addData(c); q.processAllAvailable()
-          peak = math.max(peak, q.recentProgress
-            .map(_.stateOperators.map(_.numRowsTotal).sum).maxOption.getOrElse(0L))
-        }
-      finally q.stop()
-    } finally
-      s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", prev)
-    (s.table(sink).collect().map(_.getLong(0)).toSet, peak)
-  }
 
   /** Replay (doc_id, text, ts_us) rows in `chunks` micro-batches through
     * the slim form with TTL enabled; returns the kept doc-id set.
@@ -58,60 +51,29 @@ class StreamingMinhashSlimSpec extends SparkTestBase {
       rows: Seq[(Long, String, Long)], chunks: Int, minJ: Double = 0.8,
       horizon: String = "1 hour", bucketCap: Int = 4096,
       delay: String = "10 seconds"): Set[Long] = {
-    val s = spark
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long)]
-    val stream = ms.toDF().toDF("doc_id", "text", "us")
-      .withColumn("ts", timestamp_micros(col("us")))
-    val kept = StreamingMinhashDedup.firstSeen(
-        s, stream, "doc_id", "text", 3, minJ,
-        tsCol = Some("ts"), watermarkDelay = delay,
-        horizon = horizon, bucketCap = bucketCap)
-      .toDF("doc_id")
-    val sink = s"mh_slim_${System.nanoTime}"
-    val prev = s.conf
-      .get("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-    s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    try graft.streaming.Streams.withRocksDb(s) {
-      val q = kept.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try
-        rows.grouped(math.max(1, rows.length / chunks + 1)).foreach { c =>
-          ms.addData(c); q.processAllAvailable()
-        }
-      finally q.stop()
-    } finally
-      s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", prev)
-    val got = s.table(sink).collect().map(_.getLong(0))
+    val got = Replay(spark, rocksDb = true, checkCorrectness = false) { s =>
+      import s.implicits._
+      Replay.chunks(s, Replay.chunked(rows, chunks)) { in =>
+        slim(s, in, minJ, delay, horizon, bucketCap)
+      }.collect().map(_.getLong(0))
+    }
     assert(got.length == got.distinct.length,
       s"kept ids emitted more than once: ${got.groupBy(identity).filter(_._2.length > 1).keys}")
     got.toSet
   }
 
   private def replayDense(rows: Seq[(Long, String)], chunks: Int): Set[Long] =
-    replayDenseSeq(rows.grouped(math.max(1, rows.length / chunks + 1)).toSeq).toSet
+    replayDenseSeq(Replay.chunked(rows, chunks)).toSet
 
-  private def replayDenseSeq(batches: Seq[Seq[(Long, String)]]): Seq[Long] = {
-    val s = spark
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val kept = StreamingMinhashDedup
-      .firstSeenDense(s, ms.toDF().toDF("doc_id", "text"), "doc_id", "text", 3, 0.8)
-      .toDF("doc_id")
-    val sink = s"mh_dense_${System.nanoTime}"
-    graft.streaming.Streams.withRocksDb(s) {
-      val q = kept.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try
-        batches.foreach { c => ms.addData(c); q.processAllAvailable() }
-      finally q.stop()
+  private def replayDenseSeq(batches: Seq[Seq[(Long, String)]]): Seq[Long] =
+    Replay(spark, rocksDb = true) { s =>
+      import s.implicits._
+      Replay.chunks(s, batches) { in =>
+        StreamingMinhashDedup
+          .firstSeenDense(s, in.toDF("doc_id", "text"), "doc_id", "text", 3, 0.8)
+          .toDF("doc_id")
+      }.collect().map(_.getLong(0)).toSeq
     }
-    s.table(sink).collect().map(_.getLong(0)).toSeq
-  }
 
   test("slim (TTL mode) == dense on the fixture corpus, chunking-invariant") {
     import spark.implicits._
@@ -205,31 +167,17 @@ class StreamingMinhashSlimSpec extends SparkTestBase {
       (1L, baseText, 1000000L),
       (2L, baseText + " mike", 1001000L), // near-dup of 1 → dropped
       (3L, "one two three four five six seven eight nine ten eleven twelve", 1002000L))
-    val s = spark
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long)]
-    val stream = ms.toDF().toDF("doc_id", "text", "us")
-      .withColumn("ts", timestamp_micros(col("us")))
-    val kept = StreamingMinhashDedup.firstSeen(
-        s, stream, "doc_id", "text", 3, 0.8, tsCol = Some("ts"))
-      .toDF("doc_id")
-    val sink = s"mh_replay_${System.nanoTime}"
-    val prev = s.conf
-      .get("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-    s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    try graft.streaming.Streams.withRocksDb(s) {
-      val q = kept.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try {
-        ms.addData(rows); q.processAllAvailable()
-        ms.addData(rows) // the at-least-once source redelivers the whole batch
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally
-      s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", prev)
-    val got = s.table(sink).collect().map(_.getLong(0)).toSeq
+    // the at-least-once source redelivers the whole batch
+    val got = Replay(spark, rocksDb = true, checkCorrectness = false) { s =>
+      import s.implicits._
+      Replay.chunks(s, Seq(rows, rows)) { in =>
+        StreamingMinhashDedup.firstSeen(
+            s, in.toDF("doc_id", "text", "us")
+              .withColumn("ts", timestamp_micros(col("us"))),
+            "doc_id", "text", 3, 0.8, tsCol = Some("ts"))
+          .toDF("doc_id")
+      }.collect().map(_.getLong(0)).toSeq
+    }
     assert(got.sorted == Seq(1L, 3L), s"got $got")
   }
 }

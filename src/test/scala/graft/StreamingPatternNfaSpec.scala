@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Pattern, PatternNfa}
 import graft.operators.Pattern.RunStep
+import graft.streaming.{Replay, StreamingPatternNfa}
 
 /** Streaming NFA pattern matching (streaming/StreamingPatternNfa.scala):
   * per-window overlap-capable contiguous matching through the shared
@@ -14,8 +16,10 @@ import graft.operators.Pattern.RunStep
 class StreamingPatternNfaSpec extends SparkTestBase {
   import spark.implicits._
 
+  private def events(in: DataFrame) = in.toDF("k", "es", "ty")
+    .withColumn("ts", timestamp_micros(col("es") * 1000000L))
+
   test("per-window stream output equals the batch NFA; unclosed windows are silent") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val w = 86400L
     val steps = Seq(
       RunStep("ab", col("ty") === "a" || col("ty") === "b"),
@@ -29,28 +33,21 @@ class StreamingPatternNfaSpec extends SparkTestBase {
       (1L, w + 50L, "a"), (1L, w + 60L, "b"),
       (9L, 2 * w + 10L, "x")
     ).sortBy(_._2)
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val stream = ms.toDF().toDF("k", "es", "ty")
-      .withColumn("ts", timestamp_micros(col("es") * 1000000L))
     val sink = s"nfa_stream_${System.nanoTime}"
-    var lastStateRows = -1L
-    graft.streaming.Streams.withRocksDb(spark) {
-      val q = graft.streaming.StreamingPatternNfa.firstMatch(stream, "ts",
-          "k", steps, w)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try {
-        rows.grouped(3).foreach { c => ms.addData(c); q.processAllAvailable() }
-        lastStateRows = q.recentProgress.reverse
-          .find(_.stateOperators.nonEmpty)
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-      } finally q.stop()
-    }
     // native-typed keys: the long key comes back as a long `u`
-    val got = spark.table(sink)
-      .select("ws", "u", "m_start", "m_end")
-      .as[(Long, Long, Long, Long)].collect().toSet
+    val (got, lastStateRows) = Replay(spark, rocksDb = true) { s =>
+      val q = Replay.chunksInto(s, rows.grouped(3).toSeq) { in =>
+        StreamingPatternNfa.firstMatch(events(in), "ts", "k", steps, w)
+          .writeStream.outputMode("append").format("memory")
+          .queryName(sink).start()
+      }
+      (s.table(sink)
+        .select("ws", "u", "m_start", "m_end")
+        .as[(Long, Long, Long, Long)].collect().toSet,
+       q.recentProgress.reverse
+        .find(_.stateOperators.nonEmpty)
+        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L))
+    }
     // batch truth per closed window
     val all = rows.toDF("k", "es", "ty").withColumn("ws",
       expr(s"(es div $w) * $w"))
@@ -70,7 +67,6 @@ class StreamingPatternNfaSpec extends SparkTestBase {
   }
 
   test("all-matches stream twin equals the batch enumeration per closed window") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val w = 86400L
     // same-predicate consecutive pair — the overlap-only enumeration
     val steps = Seq(
@@ -85,22 +81,12 @@ class StreamingPatternNfaSpec extends SparkTestBase {
       // window 2: open — closes 0 and 1, never emits itself
       (9L, 2 * w + 10L, "x")
     ).sortBy(_._2)
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String)]
-    val stream = ms.toDF().toDF("k", "es", "ty")
-      .withColumn("ts", timestamp_micros(col("es") * 1000000L))
-    val sink = s"nfa_all_stream_${System.nanoTime}"
-    graft.streaming.Streams.withRocksDb(spark) {
-      val q = graft.streaming.StreamingPatternNfa.allMatches(stream, "ts",
-          "k", steps, w)
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      try rows.grouped(4).foreach { c => ms.addData(c); q.processAllAvailable() }
-      finally q.stop()
+    val got = Replay(spark, rocksDb = true) { s =>
+      Replay.chunks(s, rows.grouped(4).toSeq) { in =>
+        StreamingPatternNfa.allMatches(events(in), "ts", "k", steps, w)
+      }.select("ws", "u", "match_no", "m_start", "m_end")
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
     }
-    val got = spark.table(sink)
-      .select("ws", "u", "match_no", "m_start", "m_end")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
     val all = rows.toDF("k", "es", "ty").withColumn("ws",
       expr(s"(es div $w) * $w"))
     val expected = Seq(0L, w).flatMap { ws =>

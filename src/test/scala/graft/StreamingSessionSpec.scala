@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{AggFn, AggSpec, SessionWindows}
-import graft.streaming.Streams
+import graft.streaming.{Replay, Streams}
 
 /** Session windows in streaming mode: gap-merged per-key sessions with a
   * watermark must agree with the batch SessionWindows operator on every
@@ -11,14 +11,15 @@ import graft.streaming.Streams
 class StreamingSessionSpec extends SparkTestBase {
 
   test("streaming session windows (append) ⊆ batch sessions, none invented") {
-    val stream = Streams.events(spark, sfDir)
-      .withWatermark("ts", "30 minutes")
-      .groupBy(session_window(col("ts"), "1800 seconds"), col("user_id"))
-      .agg(count(lit(1)).as("cnt"),
-        graft.operators.Quant.q4(sum(col("value"))).as("sum_v"))
-      .select(unix_micros(col("session_window.start")).as("ss"),
-        col("user_id"), col("cnt"), col("sum_v"))
-    val got = Streams.runToTable(spark, stream, "s_session", "append")
+    val got = Replay(spark) { s =>
+      Replay.drain(Streams.events(s, sfDir)
+        .withWatermark("ts", "30 minutes")
+        .groupBy(session_window(col("ts"), "1800 seconds"), col("user_id"))
+        .agg(count(lit(1)).as("cnt"),
+          graft.operators.Quant.q4(sum(col("value"))).as("sum_v"))
+        .select(unix_micros(col("session_window.start")).as("ss"),
+          col("user_id"), col("cnt"), col("sum_v")))
+    }
 
     val batch = SessionWindows.aggregate(
       Tables.events(spark, sfDir), col("ts"), 1800,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.streaming.{Streams, StreamingCountWindows}
+import graft.streaming.{Replay, Streams, StreamingCountWindows}
 
 /** Streaming-mode equivalence: the same operator definitions, run as
   * Structured Streaming queries over the replayed events parquet, must agree
@@ -20,20 +20,20 @@ class StreamingSpec extends SparkTestBase {
     AggSpec(AggFn.Max, col("value"), "max_v"))
 
   test("streaming sliding window agg (complete mode) == batch") {
-    val stream = Streams.events(spark, sfDir)
-    val out = Streams.runToTable(spark,
-      Streams.windowAgg(stream, 3600, 60, Seq("event_type"), aggs),
-      "s_sliding", "complete")
+    val out = Replay(spark) { s =>
+      Replay.drain(Streams.windowAgg(
+        Streams.events(s, sfDir), 3600, 60, Seq("event_type"), aggs), "complete")
+    }
     val batch = TimeWindows.aggregate(
       Tables.events(spark, sfDir), col("ts"), 3600, 60, Seq("event_type"), aggs)
     assertSameRows(out, batch)
   }
 
   test("streaming tumbling agg with watermark (append mode) emits finalized windows == batch minus tail") {
-    val stream = Streams.events(spark, sfDir)
-    val out = Streams.runToTable(spark,
-      Streams.windowAgg(stream, 600, 600, Seq("event_type"), aggs, watermark = Some("10 minutes")),
-      "s_tumbling_append", "append")
+    val out = Replay(spark) { s =>
+      Replay.drain(Streams.windowAgg(Streams.events(s, sfDir), 600, 600,
+        Seq("event_type"), aggs, watermark = Some("10 minutes")))
+    }
     val batch = TimeWindows.aggregate(
       Tables.events(spark, sfDir), col("ts"), 600, 600, Seq("event_type"), aggs)
     // append emits exactly the windows finalized by the last watermark:
@@ -47,11 +47,10 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming count window (transformWithState) == batch full windows") {
-    val stream = Streams.events(spark, sfDir)
-    val out = StreamingCountWindows.tumbling(spark, stream, 10).toDF()
-      .withColumn("sum_v", graft.operators.Quant.q4(col("sum_v")))
-    val got = Streams.withRocksDb(spark)(
-      Streams.runToTable(spark, out, "s_count", "append"))
+    val got = Replay(spark, rocksDb = true) { s =>
+      Replay.drain(StreamingCountWindows.tumbling(s, Streams.events(s, sfDir), 10)
+        .toDF().withColumn("sum_v", graft.operators.Quant.q4(col("sum_v"))))
+    }
 
     val batch = CountWindows.tumblingIds(
         Tables.eventsWithEpoch(spark, sfDir),
@@ -63,11 +62,10 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming GLOBAL (un-keyed) count window == batch global full windows") {
-    val stream = Streams.events(spark, sfDir)
-    val out = StreamingCountWindows.tumblingGlobal(spark, stream, 100).toDF()
-      .withColumn("sum_v", graft.operators.Quant.q4(col("sum_v")))
-    val got = Streams.withRocksDb(spark)(
-      Streams.runToTable(spark, out, "s_count_global", "append"))
+    val got = Replay(spark, rocksDb = true) { s =>
+      Replay.drain(StreamingCountWindows.tumblingGlobal(s, Streams.events(s, sfDir), 100)
+        .toDF().withColumn("sum_v", graft.operators.Quant.q4(col("sum_v"))))
+    }
 
     val batch = CountWindows.tumblingIds(
         Tables.eventsWithEpoch(spark, sfDir),
@@ -79,11 +77,10 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming generic sliding count window (size 50, slide 10) == batch slidingAgg") {
-    val stream = Streams.events(spark, sfDir)
-    val out = StreamingCountWindows.sliding(spark, stream, 50, 10).toDF()
-      .withColumn("sum_v", graft.operators.Quant.q4(col("sum_v")))
-    val got = Streams.withRocksDb(spark)(
-      Streams.runToTable(spark, out, "s_count_slide", "append"))
+    val got = Replay(spark, rocksDb = true) { s =>
+      Replay.drain(StreamingCountWindows.sliding(s, Streams.events(s, sfDir), 50, 10)
+        .toDF().withColumn("sum_v", graft.operators.Quant.q4(col("sum_v"))))
+    }
 
     val batch = CountWindows.slidingAgg(
         Tables.eventsWithEpoch(spark, sfDir)
@@ -95,36 +92,26 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("RocksDB state store provider: streaming sliding agg still == batch") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = Streams.events(spark, sfDir)
-      val out = Streams.runToTable(spark,
-        Streams.windowAgg(stream, 3600, 60, Seq("event_type"), aggs),
-        "s_sliding_rocks", "complete")
-      val batch = TimeWindows.aggregate(
-        Tables.events(spark, sfDir), col("ts"), 3600, 60, Seq("event_type"), aggs)
-      assertSameRows(out, batch)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    val out = Replay(spark, rocksDb = true) { s =>
+      Replay.drain(Streams.windowAgg(
+        Streams.events(s, sfDir), 3600, 60, Seq("event_type"), aggs), "complete")
     }
+    val batch = TimeWindows.aggregate(
+      Tables.events(spark, sfDir), col("ts"), 3600, 60, Seq("event_type"), aggs)
+    assertSameRows(out, batch)
   }
 
   test("streaming stream-stream windowed theta join ⊆ batch join") {
-    val e = Streams.events(spark, sfDir)
-    val l = e.filter(col("event_type") === "click")
-      .select(col("ts").as("l_ts"), col("event_id").as("l_id"), col("user_id"))
-    val r = Streams.events(spark, sfDir).filter(col("event_type") === "purchase")
-      .select(col("ts").as("r_ts"), col("event_id").as("r_id"),
-        col("user_id").as("r_user"))
-    val j = Streams.windowedThetaJoin(l, r, "l_ts", "r_ts", 600,
-        col("user_id") === col("r_user"), "10 minutes")
-      .select(col("user_id"), col("l_id"), col("r_id"))
-    val got = Streams.runToTable(spark, j, "s_join", "append")
+    val got = Replay(spark) { s =>
+      val l = Streams.events(s, sfDir).filter(col("event_type") === "click")
+        .select(col("ts").as("l_ts"), col("event_id").as("l_id"), col("user_id"))
+      val r = Streams.events(s, sfDir).filter(col("event_type") === "purchase")
+        .select(col("ts").as("r_ts"), col("event_id").as("r_id"),
+          col("user_id").as("r_user"))
+      Replay.drain(Streams.windowedThetaJoin(l, r, "l_ts", "r_ts", 600,
+          col("user_id") === col("r_user"), "10 minutes")
+        .select(col("user_id"), col("l_id"), col("r_id")))
+    }
 
     val batchRows = graft.queries.ReferenceQueries.qJoinTheta
       .build(spark, sfDir).select("user_id", "l_id", "r_id")
@@ -136,10 +123,10 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming paned sliding agg (chained stateful aggs) emits finalized windows matching batch") {
-    val stream = Streams.events(spark, sfDir)
-    val out = Streams.runToTable(spark,
-      Streams.windowAggPaned(stream, 3600, 60, Seq("event_type"), allFive, "10 minutes"),
-      "s_paned", "append")
+    val out = Replay(spark) { s =>
+      Replay.drain(Streams.windowAggPaned(
+        Streams.events(s, sfDir), 3600, 60, Seq("event_type"), allFive, "10 minutes"))
+    }
     val batch = TimeWindows.aggregatePaned(
       Tables.events(spark, sfDir), col("ts"), 3600, 60, Seq("event_type"), allFive)
     assert(out.count() > 0, "no finalized windows emitted")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Joins
-import graft.streaming.StreamingThetaJoin
+import graft.streaming.{Replay, StreamingThetaJoin}
 
 /** Streaming row-windowed θ-join ≡ the batch [[Joins.rowWindowedTheta]]
   * contract on the same interleave, including across micro-batch boundaries
@@ -23,28 +23,16 @@ class StreamingThetaRowSpec extends SparkTestBase {
     (7L, false, 10L, 106L, 7L),  // R7 key10: lefts ring [L4,L5] -> pairs (4,7),(5,7)
     (8L, true, 20L, 107L, 8L))   // L8 key20: rights ring [R7] (R6 evicted) -> no pair
 
-  private def streamed(chunks: Int): Set[(Long, Long, Long)] = {
-    val s = spark
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import s.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Boolean, Long, Long, Long)]
-    val out = StreamingThetaJoin.rowWindowedTheta(
-      s, ms.toDF().toDF("ord", "left", "key", "ts", "id"),
-      leftRows = 2, rightRows = 1)
-    val sink = s"s_theta_row_${System.nanoTime}"
-    graft.streaming.Streams.withRocksDb(s) {
-      val q = out.writeStream.outputMode("append")
-        .format("memory").queryName(sink).start()
-      try
-        rows.grouped(math.max(1, rows.length / chunks + 1)).foreach { c =>
-          ms.addData(c); q.processAllAvailable()
-        }
-      finally q.stop()
+  private def streamed(chunks: Int): Set[(Long, Long, Long)] =
+    Replay(spark, rocksDb = true) { s =>
+      import s.implicits._
+      Replay.chunks(s, Replay.chunked(rows, chunks)) { in =>
+        StreamingThetaJoin.rowWindowedTheta(
+          s, in.toDF("ord", "left", "key", "ts", "id"),
+          leftRows = 2, rightRows = 1).toDF()
+      }.select("key", "l_id", "r_id")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
-    s.table(sink).select("key", "l_id", "r_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-  }
 
   private lazy val batchPairs: Set[(Long, Long, Long)] = {
     import spark.implicits._

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotLake
-import graft.streaming.StreamingUpsert
+import graft.streaming.{Replay, StreamingUpsert}
 
 /** Streaming CDC apply: replayed batches fold into the snapshot with
   * latest-wins semantics, versions advance pointer-last, and a replayed
@@ -31,21 +31,18 @@ class StreamingUpsertSpec extends SparkTestBase {
 
   test("CDC stream folds into the snapshot; final state equals batch merge") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val root = freshRoot("cdc")
     SnapshotLake.commit(
       Seq((1L, "a", 0L), (2L, "b", 0L), (3L, "c", 0L)).toDF("id", "v", "ver"),
       root, 0L)
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long)]
-    val q = StreamingUpsert.start(ms.toDF().toDF("id", "v", "ver"), root,
-      "id", "ver", freshRoot("ckpt"))
-    try {
-      ms.addData(Seq((2L, "B1", 1L), (2L, "B2", 2L), (9L, "z", 1L)))
-      q.processAllAvailable()
-      ms.addData(Seq((1L, "A", 5L), (9L, "z2", 3L)))
-      q.processAllAvailable()
-    } finally q.stop()
+    Replay(spark) { s =>
+      Replay.chunksInto(s, Seq(
+          Seq((2L, "B1", 1L), (2L, "B2", 2L), (9L, "z", 1L)),
+          Seq((1L, "A", 5L), (9L, "z2", 3L)))) { in =>
+        StreamingUpsert.start(in.toDF("id", "v", "ver"), root,
+          "id", "ver", freshRoot("ckpt"))
+      }
+    }
     val got = SnapshotLake.read(spark, root)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got == Set((1L, "A", 5L), (2L, "B2", 2L), (3L, "c", 0L), (9L, "z2", 3L)))

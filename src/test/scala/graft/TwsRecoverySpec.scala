@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.streaming.{Streams, StreamingFirstSeen}
+import graft.streaming.{Replay, StreamingFirstSeen}
 
 /** Crash-recovery for CUSTOM `transformWithState` state (the
   * [[ExactlyOnceSpec]] protocol, extended from native window state to the
@@ -39,8 +40,8 @@ class TwsRecoverySpec extends SparkTestBase {
     part1.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/part1")
 
     val schema = part1.schema
-    def runOnce(): Unit = {
-      val in = spark.readStream.schema(schema)
+    def runOnce(s: SparkSession): Unit = {
+      val in = s.readStream.schema(schema)
         .option("pathGlobFilter", "*.parquet")
         .parquet(s"$srcDir/*")
         // +1 day so no event time touches the initial watermark value 0
@@ -49,20 +50,18 @@ class TwsRecoverySpec extends SparkTestBase {
         .withWatermark("ts", "0 seconds")
       val out = StreamingFirstSeen.firstSeen(in, "text", "ts")
         .select("doc_id", "source", "n_tok")
-      val q = out.writeStream
+      Replay.drainInto(out.writeStream
         .outputMode("append")
         .format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        .start())
     }
 
-    Streams.withRocksDb(spark) {
-      runOnce() // first half deduped, state checkpointed
+    Replay(spark, rocksDb = true) { s =>
+      runOnce(s) // first half deduped, state checkpointed
       part2.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/part2")
-      runOnce() // restart: re-sent fingerprints must hit surviving state
+      runOnce(s) // restart: re-sent fingerprints must hit surviving state
     }
 
     val got = spark.read.parquet(outDir).select("doc_id").as[Long].collect().toSeq

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.streaming.Replay
 
 /** Pins the LATE-INPUT boundary the replay harnesses depend on, because
   * the two stateful operator families differ:
@@ -21,7 +23,6 @@ class WatermarkBoundarySpec extends SparkTestBase {
   import spark.implicits._
 
   test("windowed agg keeps open-window rows below the watermark; TWS drops at-or-below") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val w = 86400L
     val steps = Seq("view", "click", "buy")
     // batch 1 sets the watermark to 100; batch 2 probes the boundary:
@@ -32,49 +33,30 @@ class WatermarkBoundarySpec extends SparkTestBase {
       Seq(("A", 100L, "click"), ("B", 101L, "click"), ("C", 99L, "click")),
       Seq(("Z", 2 * w + 10L, "view")))
 
-    def feed(buildSink: org.apache.spark.sql.DataFrame => (String, org.apache.spark.sql.streaming.StreamingQuery)): String = {
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Long, String)]
-      val stream = ms.toDF().toDF("u", "es", "ty")
-        .withColumn("ts", timestamp_micros(col("es") * 1000000L))
-      val (sink, q) = buildSink(stream)
-      try {
-        batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-      } finally q.stop()
-      sink
-    }
+    def events(in: DataFrame) = in.toDF("u", "es", "ty")
+      .withColumn("ts", timestamp_micros(col("es") * 1000000L))
 
     // TWS path: the live funnel — depth 2 iff the click survived
-    val twsSink = graft.streaming.Streams.withRocksDb(spark) {
-      feed { stream =>
-        val sink = s"wmb_tws_${System.nanoTime}"
-        val q = graft.streaming.StreamingFunnel.userDepthLive(stream, "ts",
-            "u", "ty", steps, w)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(sink).start()
-        (sink, q)
-      }
+    val finDepths = Replay(spark, rocksDb = true) { s =>
+      Replay.chunks(s, batches) { in =>
+        graft.streaming.StreamingFunnel.userDepthLive(events(in), "ts",
+          "u", "ty", steps, w)
+      }.where(col("fin")).select("u", "depth").as[(String, Int)].collect().toMap
     }
-    val finDepths = spark.table(twsSink).where(col("fin"))
-      .select("u", "depth").as[(String, Int)].collect().toMap
     assert(finDepths == Map("A" -> 1, "B" -> 2, "C" -> 1),
       s"TWS must drop input at-or-below the watermark: $finDepths")
 
     // windowed-agg path: per-user event counts in the (still open at
     // batch 2) window — every probe row is kept
-    val aggSink = feed { stream =>
-      val sink = s"wmb_agg_${System.nanoTime}"
-      val q = stream
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), s"$w seconds"), col("u"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName(sink).start()
-      (sink, q)
+    val counts = Replay(spark) { s =>
+      Replay.chunks(s, batches) { in =>
+        events(in)
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), s"$w seconds"), col("u"))
+          .agg(count(lit(1)).as("n"))
+      }.where(expr("unix_micros(window.start)") === 0L)
+        .select("u", "n").as[(String, Long)].collect().toMap
     }
-    val counts = spark.table(aggSink)
-      .where(expr("unix_micros(window.start)") === 0L)
-      .select("u", "n").as[(String, Long)].collect().toMap
     assert(counts == Map("A" -> 2L, "B" -> 2L, "C" -> 2L),
       s"windowed agg must keep open-window rows below the watermark: $counts")
   }
